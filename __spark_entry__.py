@@ -1,11 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query contract over the sf* testdata: DuckDB differentials of the
+engine's market operators.
 
-``queries()`` exposes one DataFrame-producing callable per operator
-class implemented from SURVEY.md §2 (plus the training-data ops);
-``oracle_sql()`` gives the DuckDB-equivalent SQL for each. Both
-sides alias every computed column identically and round derived
-doubles to 6 decimals so the driver's order-insensitive value hash
-is stable across engines.
+``queries()`` exposes one DataFrame-producing callable per operator the
+market path runs — the extreme-cases LAG detector, LEAD gap audit,
+trailing WMA, as-of join, keep-last dedup and the margin-asset CTE
+shape — each expressed on the generic ``events``/TPC-H testdata
+tables; ``oracle_sql()`` gives the DuckDB-equivalent SQL for each.
+Both sides alias every computed column identically and round derived
+doubles to 6 decimals so an order-insensitive value comparison is
+stable across engines. ``entry(spark)`` is the premium-pipeline shape
+(hourly rollup, trailing WMA, LAG change detection) as one plan.
 
 Implementation lives in ``binancedatapipeline_spark``; this module
 only wires table loads to plans.
@@ -22,46 +26,9 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from binancedatapipeline_spark.operators.wma import with_wma  # noqa: E402
+from binancedatapipeline_spark.operators.asof import asof_join  # noqa: E402
 from binancedatapipeline_spark.operators.dedup import dedup_keep_last  # noqa: E402
-from binancedatapipeline_spark.textops.analysis import (  # noqa: E402
-    LANG_MARKERS,
-    tfidf_top_terms,
-    tokens_col,
-    with_lang_guess,
-    with_quality,
-    with_rolling_fingerprint,
-    with_tokens,
-)
-from binancedatapipeline_spark.textops.dedup import (  # noqa: E402
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_P,
-    exact_duplicates,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash,
-)
-from binancedatapipeline_spark.textops.dsir import (  # noqa: E402
-    fit_log_ratio,
-    score_importance,
-)
-from binancedatapipeline_spark.textops.corpus_io import dedup_by_url  # noqa: E402
-from binancedatapipeline_spark.textops.decontam import contamination_hits  # noqa: E402
-from binancedatapipeline_spark.textops.packing import pack_sequences  # noqa: E402
-from binancedatapipeline_spark.textops.sampling import (  # noqa: E402
-    mixture_oversample,
-    mixture_sample,
-    stable_split,
-)
-from binancedatapipeline_spark.similarity import (  # noqa: E402
-    cosine_topk,
-    sq_encode,
-    sq_topk,
-    train_sq_params,
-)
-from binancedatapipeline_spark.operators.spread import spread  # noqa: E402
+from binancedatapipeline_spark.operators.wma import with_wma  # noqa: E402
 
 
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
@@ -133,24 +100,6 @@ def _r6(col):
     return F.round(col, 6)
 
 
-def _dsum(col, scale: str = "decimal(24,6)"):
-    """Exact grid-sum cast back to double — bit-identical across
-    engines regardless of partial-aggregation order.
-
-    Implemented as a scaled-integer sum rather than decimal partial
-    aggregates: the inputs sit on a fixed decimal grid, so
-    round(x·10^s) is exact, the bigint sum is exact and associative,
-    and only the final divide returns to double — same values as the
-    oracle's ::DECIMAL(p,s) sum at roughly half the aggregation cost
-    (decimal128 partial aggregates don't codegen as tightly as long
-    sums). Headroom: Σ|x| ≤ 9.2·10¹⁸ / 10^s per group — plenty for
-    these grids; switch back to true decimal sums past that."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = int(scale.rstrip(")").split(",")[1])
-    factor = 10 ** s
-    return (F.sum(F.round(c * factor).cast("bigint")) / factor).cast("double")
-
-
 # ---------------------------------------------------------------- flagship
 
 
@@ -180,163 +129,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- relational
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/P5: grouped aggregation with filter (TPC-H Q1 shape)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1999-12-01")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),  # integral values: exact
-            _dsum("l_extendedprice", "decimal(20,2)").alias("sum_base_price"),
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-            (F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty"),
-            (_dsum("l_extendedprice", "decimal(20,2)") / F.count(F.lit(1))).alias("avg_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_filtered_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2-P7: IN-list + range predicates, arithmetic projection."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            F.col("l_returnflag").isin("R", "A")
-            & F.col("l_shipdate").between("1996-01-01", "1997-12-31")
-            & (F.col("l_quantity") > 25)
-        )
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_returnflag",
-            _r6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net_price"),
-        )
-    )
-
-
-def q_join_composite_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: composite-key equi join (the premium-join shape) — click
-    vs view activity joined per (user_id, hour).
-
-    Both join sides derive from ONE scan+aggregate (grouped by
-    (user_id, hour, event_type)), so the exchange under the aggregate
-    is identical for both sides and ReusedExchange serves the second
-    side from the first's shuffle files — the events scan and partial
-    agg run once. The per-side filter deliberately tests the
-    AGGREGATED ``etype = max(event_type)`` (constant per group, equal
-    to the grouping value) rather than the grouping column itself:
-    a grouping-column predicate would be pushed below the aggregate
-    into the scan, forking the subplans back into the round-3
-    two-scan shape (measured 57× DuckDB — the bench's worst join).
-    The join itself — a real composite-key shuffle join, the J1 shape
-    this query exists to demonstrate — is unchanged."""
-    ev = _t(spark, sf_dir, "events")
-    hourly = (
-        ev.filter(F.col("event_type").isin("click", "view"))
-        .groupBy(
-            F.col("user_id"),
-            F.date_trunc("hour", "ts").alias("hour"),
-            F.col("event_type"),
-        )
-        .agg(
-            _dsum("value", "decimal(18,2)").alias("v"),
-            F.count(F.lit(1)).alias("n"),
-            F.max("event_type").alias("etype"),
-        )
-        .drop("event_type")
-    )
-    clicks = hourly.filter(F.col("etype") == "click").drop("etype")
-    views = hourly.filter(F.col("etype") == "view").drop("etype")
-    return (
-        clicks.alias("c")
-        .join(views.alias("v"), on=["user_id", "hour"], how="inner")
-        .select(
-            "user_id",
-            "hour",
-            F.col("c.n").alias("n_clicks"),
-            F.col("v.n").alias("n_views"),
-            _r6(F.col("c.v") / F.col("v.v") - 1).alias("click_view_premium"),
-        )
-    )
-
-
-def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3: equi conjunct + range conjunct (ts > date + interval)."""
-    li = _t(spark, sf_dir, "lineitem").alias("l")
-    o = _t(spark, sf_dir, "orders").alias("o")
-    joined = li.join(
-        o,
-        on=(F.col("l.l_orderkey") == F.col("o.o_orderkey"))
-        & (F.col("l.l_shipdate") > F.col("o.o_orderdate") + F.expr("interval 5 days")),
-        how="inner",
-    )
-    return joined.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-    )
-
-
-def q_join_dims_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2: fact x small-dim chain (broadcast joins)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"))
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            (_dsum("c_acctbal", "decimal(20,2)") / F.count(F.lit(1))).alias("avg_acctbal"),
-        )
-    )
-
-
-def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: NOT EXISTS — customers with no 1995 order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate").between("1995-01-01", "1995-12-31")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
-def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS — suppliers with at least one 2001 shipment."""
-    s = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") >= "2001-01-01")
-    return (
-        s.join(li, s.s_suppkey == li.l_suppkey, "left_semi")
-        .select("s_suppkey", "s_name", "s_nationkey")
-    )
-
-
-def q_doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L53 substring duplicate-span detection (Lee et al. 2021;
-    textops/spans.py `duplicate_spans`), oracle-gated per the round-6
-    verdict: maximal token spans covered by 8-token windows repeating
-    anywhere in the corpus, keep-first exemption, LAG island merge.
-    The oracle groups windows by their token STRING where Spark
-    groups by xxhash64 — identical spans unless a 64-bit collision
-    lands inside one corpus, which the driver's hash check would
-    expose."""
-    from binancedatapipeline_spark.textops.spans import duplicate_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    out = duplicate_spans(docs, window=8)
-    return out.select(
-        "doc_id",
-        F.col("span_start").cast("long").alias("span_start"),
-        F.col("span_end").cast("long").alias("span_end"),
-    )
+# ---------------------------------------------------------------- market operators
 
 
 def q_dedup_keep_last(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -413,35 +206,6 @@ def q_wma20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O2/O3: global top-k with deterministic tiebreak.
-
-    Not registered in queries() (the driver's CORRECTNESS window caps
-    at 50 rows; ordered top-k is driver-verified via topk_per_group) —
-    kept because the TakeOrderedAndProject plan regression test drives
-    it directly."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(10)
-        .select("o_orderkey", "o_custkey", _r6("o_totalprice").alias("o_totalprice"),
-                "o_orderdate")
-    )
-
-
-def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking window: top 3 orders per customer by price."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("o_custkey", "o_orderkey", _r6("o_totalprice").alias("o_totalprice"), "rank")
-    )
-
-
 def q_cte_margin_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1+J2+A3+U2: the margin-asset derivation shape — per-supplier
     activity range, dim join, distinct, plus appended synthetic row."""
@@ -465,110 +229,9 @@ def q_cte_margin_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assets.unionByName(synthetic)
 
 
-def q_scalar_datemath(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1-F4: epoch-ms conversion, interval arithmetic, tz display."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.unix_millis("ts").alias("ts_ms"),
-        (F.col("ts") + F.expr("interval 5 days")).alias("ts_plus5d"),
-        F.date_trunc("hour", "ts").alias("ts_hour"),
-        F.from_utc_timestamp("ts", "Asia/Shanghai").alias("ts_cn"),
-    )
-
-
-def q_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot-style conditional aggregation per user."""
-    ev = _t(spark, sf_dir, "events")
-    pick = lambda typ: F.sum(  # noqa: E731
-        F.when(F.col("event_type") == typ, F.col("value"))
-        .otherwise(0.0)
-        .cast("decimal(18,2)")
-    ).cast("double")
-    return ev.groupBy("user_id").agg(
-        _r6(pick("click")).alias("click_value"),
-        _r6(pick("view")).alias("view_value"),
-        _r6(pick("purchase")).alias("purchase_value"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L70 host-authority PageRank (operators/pagerank.py),
-    oracle-gated per the round-9 verdict: rank a host-level link
-    graph deterministically synthesized from documents (29 source
-    hosts linking into 37 targets, so hosts 29–36 are DANGLING —
-    inbound links only — and their mass redistributes along the
-    teleport vector; duplicate doc-level links collapse to one host
-    edge; self-links drop). Fixed damping 0.85 × 8 power iterations
-    makes the result a pure function of the edge set, so DuckDB
-    reproduces it with a recursive CTE running the same iteration
-    (ranks rounded to 6dp on both sides; float noise is ~1e-15).
-    8 iterations, not 20: the gate verifies the ITERATION is right,
-    for which any fixed count works — each extra round is ~5 more
-    tiny-task stages of pure overhead on the 37-node test graph."""
-    from binancedatapipeline_spark.operators.pagerank import pagerank
-
-    d = F.col("doc_id")
-    edges = _t(spark, sf_dir, "documents").select(
-        F.concat(F.lit("host"), (d % 29).cast("string")).alias("src"),
-        F.concat(F.lit("host"), ((d * 13 + 7) % 37).cast("string")).alias("dst"),
-    )
-    return pagerank(edges, iterations=8, damping=0.85).select(
-        "node", F.round("rank", 6).alias("rank")
-    )
-
-
-def q_groupby_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAVING: filter on aggregate output. RETIRED from the driver
-    registry in round 10 (rotation for host_pagerank) — stays
-    DuckDB-diff-tested verbatim in tests/test_retired_queries.py."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            _r6(_dsum("value", "decimal(18,2)") / F.count(F.lit(1))).alias("avg_value"),
-        )
-        .filter(F.col("n") >= 10)
-    )
-
-
-def q_events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5: tumbling-window re-aggregation (1h bars from raw events).
-
-    avg_value is rounded to 6dp ON THE INTEGER GRID — half-up in exact
-    integer arithmetic ((cents·2·10⁴ + n) div 2n), then one exact
-    division by 10⁶ — rather than round(double, 6): at sf1 group sizes
-    the double quotient lands exactly on 6dp rounding boundaries for a
-    few groups, where Spark's BigDecimal HALF_UP (on the double's full
-    binary expansion) and DuckDB's round disagree by 1 ulp of the 6th
-    decimal (caught by the round-11 sf1 differential: 2/3600 rows off
-    by 1e-6). Integer div is bit-identical across engines at any
-    scale."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            _r6(_dsum("value", "decimal(18,2)")).alias("sum_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("__cents"),
-        )
-        .withColumn(
-            "avg_value",
-            F.expr("(__cents * 20000 + n) div (2 * n)").cast("double") / F.lit(1e6),
-        )
-        .drop("__cents")
-    )
-
-
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 generalized: true as-of join — each purchase matched with
     the user's latest prior (or simultaneous) view event."""
-    from binancedatapipeline_spark.operators.asof import asof_join
-
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts"), F.col("value").alias("p_value")
@@ -588,561 +251,14 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization: a new session starts after >30 min
-    of inactivity; cumulative-sum-of-boundaries assigns session ids —
-    one shuffle, two windows."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_ms = F.unix_millis(F.col("ts")) - F.unix_millis(F.lag("ts", 1).over(w))
-    marked = ev.select("user_id", "ts", "event_id", "value").withColumn(
-        "is_new", F.when(gap_ms.isNull() | (gap_ms > 30 * 60_000), 1).otherwise(0)
-    )
-    w2 = (
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    sessioned = marked.withColumn("session_id", F.sum("is_new").over(w2))
-    return (
-        sessioned.groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            _r6(_dsum("value", "decimal(18,2)")).alias("session_value"),
-        )
-    )
-
-
-def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT: users with both clicks and purchases.
-
-    RETIRED from the 50-query registry in round 6 (driver window is
-    pinned at 50) to oracle-gate `tfidf_top_terms`: the set-operator
-    family stays covered by `semi_join` (left-semi = INTERSECT on
-    keys), `anti_join` (EXCEPT), and `full_outer`; the callable and
-    this docstring stay for the judge's operator map."""
-    ev = _t(spark, sf_dir, "events")
-    a = ev.filter(F.col("event_type") == "click").select("user_id")
-    b = ev.filter(F.col("event_type") == "purchase").select("user_id")
-    return a.intersect(b)
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 characteristic terms per document by smoothed TF-IDF
-    (L50, textops/analysis.py:tfidf_top_terms) — rotated into the
-    oracle-gated registry in round 6 per the round-5 verdict. Since
-    round 10 the operator is a pure single-pass plan (document
-    frequency as a window count over the tf relation — one tokenize,
-    no diamond, no persist side effect), so the registry call needs
-    no mode flag. tfidf is rounded to 6 decimals on BOTH sides (same
-    discipline as quality_score) so ln() ulp drift between engines
-    cannot flip the value hash."""
-    d = _t(spark, sf_dir, "documents")
-    out = tfidf_top_terms(d, k=3)
-    return out.select(
-        "doc_id", "term", "tf", _r6("tfidf").alias("tfidf"), "term_rank"
-    )
-
-
-def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact multi-column distinct-count per group.
-
-    Round 12 (VERDICT item 6): back to the single two-countDistinct
-    aggregate. The round-7 repartition-first branch-join form was
-    tuned at sf0.1, where the ~0.2-0.3 s/job scheduler floor made its
-    fewer-jobs shape win (0.62 s vs 1.05 s). Re-measured AT SF1 with
-    paired interleaved passes (tools/bench_r12_variants.py, clean
-    calibration): **Expand form 1.63 s vs branch-join 2.95 s best
-    (1.8x)** — and the reason is the scale story, not a constant:
-    the branch form's up-front repartition ships every raw row with
-    NO map-side reduction, while the Expand form's partial distinct
-    aggregate compresses duplicates per map partition BEFORE its one
-    exchange (guide §2.3 "aggregate before you shuffle"; Expand
-    doubles rows map-side only — CPU, not network). sf0.1 pays ~0.45 s
-    back to the job floor (0.63→1.10 s, disclosed in
-    OPTIMIZATION_r12.md); the 100 TB posture wins. Still nothing
-    materializes per-group value sets — the distinct is a pure
-    HashAggregate pair per gid, a hot supplier costs CPU, not
-    executor memory (collect_set stays banned; plan-regression-tested
-    in tests/test_plans_physical.py).
-
-    NULL semantics: countDistinct skips NULLs and a group whose
-    values are all NULL yields 0 without dropping the group —
-    identical to the old branch-join form (differential-tested
-    against null-only groups in tests/test_round6_fixes.py)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_suppkey").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-    )
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured: pull a field out of the JSON props string."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("k"),
-    ).filter(F.col("k") > 50)
-
-
-# ---------------------------------------------------------------- documents
-
-
-def q_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return exact_duplicates(d)
-
-
-def q_doc_rep_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-5 exact-collapse primitive (textops/dedup.py
-    exact_rep_map): every doc mapped to the min id of its
-    byte-identical group — the step that keeps near-dedup O(groups)
-    on adversarially duplicated corpora. Retired from the registry in
-    round 8 (rotation for hist_quantiles — the md5-digest machinery
-    stays oracle-gated through doc_exact_dedup); the exact query keeps
-    its DuckDB differential in tests/test_retired_queries.py."""
-    from binancedatapipeline_spark.textops.dedup import exact_rep_map
-
-    d = _t(spark, sf_dir, "documents")
-    return exact_rep_map(d).select(
-        "doc_id", F.col("__rep_id").alias("rep_id")
-    )
-
-
-def q_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-histogram quantile state (textops/sketch.py
-    hist_build + hist_quantiles): per-event-type fixed-bin histogram
-    of `value` over [0, 500) × 40 bins, then the 0.5/0.9 quantiles
-    answered off the state relation alone — the bounded-memory
-    monitoring shape (ingest keeps ≤ groups×(bins+2) rows, quantiles
-    never rescan data). Deterministic pure arithmetic end to end, so
-    the whole fit→estimate pipeline is oracle-gated: the DuckDB oracle
-    reproduces binning, cumulative-mass bin selection and linear
-    interpolation bit-identically."""
-    from binancedatapipeline_spark.textops.sketch import (
-        hist_build,
-        hist_quantiles,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    h = hist_build(ev, "value", lo=0.0, hi=500.0, bins=40,
-                   group_cols=("event_type",))
-    return hist_quantiles(h, [0.5, 0.9], group_cols=("event_type",))
-
-
-def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return with_tokens(d).select("doc_id", "n_tokens", "n_bpe_ish")
-
-
-def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return with_quality(d).select(
-        "doc_id",
-        "n_tokens",
-        _r6("mean_token_len").alias("mean_token_len"),
-        _r6("punct_ratio").alias("punct_ratio"),
-        _r6("alpha_ratio").alias("alpha_ratio"),
-        _r6("quality_score").alias("quality_score"),
-    )
-
-
-def q_doc_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return with_lang_guess(d).select("doc_id", "lang", "lang_guess")
-
-
-def q_doc_rolling_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retired from the registry in round 8 (rotation for dsir_scores);
-    stays DuckDB-diff-tested in tests/test_retired_queries.py."""
-    d = _t(spark, sf_dir, "documents")
-    return with_rolling_fingerprint(d, k=8).select("doc_id", "rolling_fp")
-
-
-def q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (textops/dsir.py — hashed-n-gram bucket
-    distributions fit on a target slice vs the whole corpus, per-doc
-    log importance weight; the data-selection family's statistical
-    core). Rotated into the registry in round 8 for doc_rolling_fp
-    (whose rolling-hash machinery stays oracle-gated through
-    doc_duplicate_spans' window hashing and diff-tested verbatim in
-    tests/test_retired_queries.py). Uses the engine-portable md5
-    bucket hash so the DuckDB oracle computes bit-identical buckets;
-    the xxhash64 production path is the default elsewhere. The fit is
-    the ONE-PASS subset form (dsir.fit_log_ratio: both distributions
-    as conditional counts of one corpus explode, ≤ m-row bounded
-    collect) and scoring is the literal-array form (the m-row fit
-    rides in as one array literal; each doc scored in its own
-    projection — no join, no doc_id re-shuffle): two corpus passes
-    and one m-bucket shuffle end to end instead of the naive six
-    passes."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    buckets = 512
-    lr, default = fit_log_ratio(
-        d, F.col("doc_id") % 50 == 0, buckets=buckets, bucket_hash="md5"
-    )
-    out = score_importance(d, lr, default, buckets=buckets, bucket_hash="md5")
-    return out.select("doc_id", F.round("dsir_logw", 6).alias("dsir_logw"))
-
-
-def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return simhash(d)
-
-
-def q_doc_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signature spot-check: first 4 hashes as columns."""
-    d = _t(spark, sf_dir, "documents")
-    sig = minhash_signatures(d, k=8)
-    return sig.select(
-        "doc_id",
-        *[F.col("sig")[i].alias(f"mh{i}") for i in range(4)],
-    )
-
-
-def q_doc_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return lsh_candidate_pairs(d, k=8, bands=4)
-
-
-def q_doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    # explicit prune mode: the sf corpora are far below the window/
-    # no-prune crossover, and skipping auto's count() probe saves one
-    # job per run (the probe is for callers who don't know their size)
-    out = ngram_jaccard_pairs(d, min_jaccard=0.2, prune="window")
-    return out.select("id_a", "id_b", "n_common", "n_a", "n_b", _r6("jaccard").alias("jaccard"))
-
-
-def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: docs sharing any word n-gram with
-    the held-out benchmark slice (doc_id % 50 == 0 plays the eval
-    set), with the per-doc count of distinct contaminated n-grams.
-    The benchmark shingle set is broadcast; the corpus side is a pure
-    map + broadcast probe (plan-tested)."""
-    d = _t(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 50 == 0)
-    corpus = d.filter(F.col("doc_id") % 50 != 0)
-    return contamination_hits(corpus, bench, n=3)
-
-
-def q_doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget sequence packing per (lang, source): documents in
-    doc_id order fill 512-token bins; output is per-bin shape stats.
-    One shuffle on the group key, per-group window — no global sort."""
-    d = _t(spark, sf_dir, "documents")
-    t = d.select(
-        "doc_id", "lang", "source",
-        F.size(tokens_col(F.col("text"))).alias("n_tokens"),
-    )
-    packed = pack_sequences(t, 512, ["lang", "source"])
-    return packed.groupBy("lang", "source", "seq_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("seq_tokens"),
-    )
-
-
-def q_doc_stable_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic md5-bucket train/val/test assignment (80/10/10)
-    keyed on doc_id, aggregated per (split, lang). Pure per-row
-    projection — membership is reproducible across runs and engines."""
-    d = _t(spark, sf_dir, "documents")
-    s = stable_split(d, "doc_id")
-    return s.groupBy("split", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("chars"),
-    )
-
-
-def q_doc_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-domain mixture down-sampling (the LLaMA/Pile
-    mixture-construction half): keep a stable md5-bucket fraction of
-    each source (100% src0, 50% src1, 25% src2, 10% everything else),
-    aggregated per source. Membership is a pure function of doc_id —
-    identical on every engine and under appends, and the filter is the
-    same pushdown-friendly bucket predicate as doc_stable_split
-    (textops/sampling.py mixture_sample)."""
-    d = _t(spark, sf_dir, "documents")
-    out = mixture_sample(
-        d, "source", {"src0": 1.0, "src1": 0.5, "src2": 0.25},
-        id_col="doc_id", default_rate=0.1,
-    )
-    return out.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("chars"),
-    )
-
-
-def q_doc_mixture_oversample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The up-sampling half of mixture construction: src0 at rate 2.5
-    emits every doc twice plus a stable md5-chosen half a third time;
-    src1 at 1.25 adds a quarter extra copy; everything else 1.0
-    (textops/sampling.py mixture_oversample — one explode, no shuffle,
-    deterministic across engines). Aggregated per source over the
-    emitted copies."""
-    d = _t(spark, sf_dir, "documents")
-    out = mixture_oversample(
-        d, "source", {"src0": 2.5, "src1": 1.25},
-        id_col="doc_id", default_rate=1.0,
-    )
-    return out.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("chars"),
-    )
-
-
-# ---------------------------------------------------------------- embeddings
-
-
-def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = cosine_topk(emb, queries, k=10)
-    return out.select("query_id", "vec_id", _r6("cosine").alias("cosine"), "rank")
-
-
-def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k over the SQ8-compressed corpus (similarity.py:
-    train_sq_params/sq_encode/sq_topk — fit per-dim 8-bit quantization
-    on the corpus, encode to 1 byte/dim, decode-on-the-fly into the
-    exact cosine plan). Rotated into the registry in round 8 for
-    approx_distinct (whose HLL++ sketch contract stays diff-tested
-    verbatim in tests/test_retired_queries.py), oracle-gating the
-    vector-compression family: the quantization grid, clamped rounding
-    and reconstruction arithmetic are all engine-portable doubles, so
-    DuckDB reproduces the scores bit-closely (round 6)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    params = train_sq_params(emb)  # dim-sized driver collect (64 rows)
-    enc = sq_encode(emb, params).select("vec_id", "sq_code")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = sq_topk(enc, queries, params, k=10)
-    return out.select("query_id", "vec_id", _r6("cosine").alias("cosine"), "rank")
-
-
-def q_emb_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid then each vector's cosine to its centroid —
-    exercises array aggregation + rejoin."""
-    emb = _t(spark, sf_dir, "embeddings")
-    n_dim = 64
-    # mean vector per label via posexplode + groupBy (scales to any dim)
-    exploded = emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-    centroid = (
-        exploded.groupBy("label", "pos")
-        .agg(F.avg("v").alias("c"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select("label", F.expr("transform(pc, x -> x.c)").alias("centroid"))
-    )
-    joined = emb.join(F.broadcast(centroid), "label")
-    cos = F.expr(
-        "aggregate(zip_with(embedding, centroid, (x, y) -> cast(x as double) * y), "
-        "cast(0.0 as double), (acc, v) -> acc + v)"
-    ) / (
-        F.sqrt(F.expr(
-            "aggregate(embedding, cast(0.0 as double), (acc, v) -> acc + cast(v as double) * cast(v as double))"
-        ))
-        * F.sqrt(F.expr(
-            "aggregate(centroid, cast(0.0 as double), (acc, v) -> acc + v * v)"
-        ))
-    )
-    return joined.select("vec_id", "label", _r6(cos).alias("cosine_to_centroid"))
-
-
-def q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, blocked on label
-    (similarity.cosine_near_dup_pairs — the Σ|block|² scale pattern)."""
-    from binancedatapipeline_spark.similarity import cosine_near_dup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # kernel="arrow" (round 12): the block pair space is scored as 64
-    # vectorized rank-1 NumPy updates instead of Σ|block|² interpreted
-    # HOF folds — bit-identical scores (fold-order adds), only
-    # survivors cross back to the JVM (guide §4.2)
-    out = cosine_near_dup_pairs(emb, threshold=0.3, block_col="label", kernel="arrow")
-    return out.select("id_a", "id_b", _r6("cosine").alias("cosine"))
-
-
-def q_rank_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking window family: rank / dense_rank / ntile per group."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.select(
-            "o_orderpriority",
-            "o_orderkey",
-            F.rank().over(w).alias("price_rank"),
-            F.dense_rank().over(w).alias("price_dense_rank"),
-            F.ntile(4).over(w).alias("price_quartile"),
-        )
-        .filter(F.col("price_rank") <= 20)
-    )
-
-
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS over lineitem: per (flag,status), per flag, total."""
-    li = _t(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               sum(l_quantity) AS sum_qty, count(*) AS n
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
-    )
-
-
-def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL++ approximate distinct per segment — the sketch path for
-    100 TB cardinality estimation.
-
-    Sketch values are engine-specific, so the checkable contract is:
-    the exact count (hash-verifiable against the oracle) plus a
-    boolean asserting the sketch landed within 5% of exact (rsd is
-    0.02, so the bound has wide margin; Spark's HLL++ is
-    deterministic, making the boolean stable). The oracle emits the
-    exact count and literal TRUE.
-
-    SPARK_GRAFT_SKETCH_ONLY=1 (opt-in, e.g. a production caller or
-    tests/test_round4_fixes.py) drops the exact countDistinct so a
-    timed run executes what a 100 TB run would — the sketch alone;
-    the oracle/correctness path (driver harness, no env var) always
-    keeps the full checkable contract.
-
-    Retired from the registry in round 8 (rotation for sq8_topk);
-    stays DuckDB-diff-tested in tests/test_retired_queries.py."""
-    ev = _t(spark, sf_dir, "events")
-    if os.environ.get("SPARK_GRAFT_SKETCH_ONLY", "0") == "1":
-        return ev.groupBy("event_type").agg(
-            F.approx_count_distinct("user_id", 0.02).alias("n_users_approx"),
-            F.count("*").alias("n_events"),
-        )
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.approx_count_distinct("user_id", 0.02).alias("__approx"),
-            F.countDistinct("user_id").alias("n_users_exact"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            "event_type",
-            "n_users_exact",
-            "n_events",
-            (
-                F.abs(F.col("__approx") - F.col("n_users_exact"))
-                <= 0.05 * F.col("n_users_exact")
-            ).alias("approx_within_5pct"),
-        )
-    )
-
-
-def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot: line status → columns, sum(qty) cells per return flag."""
-    li = _t(spark, sf_dir, "lineitem")
-    out = (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["F", "O"])
-        .agg(F.sum("l_quantity"))
-    )
-    return out.select(
-        "l_returnflag",
-        F.col("F").alias("qty_f"),
-        F.col("O").alias("qty_o"),
-    )
-
-
-def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per group (median, p90).
-
-    The exact sort-based form is what the oracle can check; the
-    100 TB path is grouped_percentiles(exact=False) — the same plan
-    over an approx_percentile sketch with bounded per-group memory —
-    pinned to this one by tests/test_round3_fixes.py."""
-    from binancedatapipeline_spark.operators.percentiles import grouped_percentiles
-
-    o = _t(spark, sf_dir, "orders")
-    out = grouped_percentiles(
-        o, ["o_orderpriority"], "o_totalprice", (0.5, 0.9), exact=True
-    )
-    return out.select(
-        "o_orderpriority",
-        _r6("p50_o_totalprice").alias("p50_price"),
-        _r6("p90_o_totalprice").alias("p90_price"),
-        "n",
-    )
-
-
-def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-based RANGE frame: trailing 2-hour event-value sum per
-    user (value-range frame, not row-count frame)."""
-    ev = _t(spark, sf_dir, "events")
-    epoch = F.unix_timestamp("ts").cast("bigint")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(epoch)
-        .rangeBetween(-7200, Window.currentRow)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        _r6(F.sum("value").over(w)).alias("trailing_2h_value"),
-    )
-
-
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel per user: first view → first click
-    after it → first purchase after that.
-
-    One groupBy (single shuffle, map-side partial) instead of the
-    naive three-scans-three-joins plan: collect each user's click and
-    purchase timestamps, then resolve the sequential mins with array
-    expressions. Per-user arrays are bounded by that user's funnel
-    events — fine for product analytics; for adversarially hot users,
-    salt or fall back to the window formulation."""
-    ev = _t(spark, sf_dir, "events")
-    agg = (
-        ev.filter(F.col("event_type").isin("view", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias(
-                "first_view"
-            ),
-            F.collect_list(
-                F.when(F.col("event_type") == "click", F.col("ts"))
-            ).alias("__clicks"),
-            F.collect_list(
-                F.when(F.col("event_type") == "purchase", F.col("ts"))
-            ).alias("__purchases"),
-        )
-        .filter(F.col("first_view").isNotNull())
-    )
-    # x >= NULL is NULL → filter drops it, so a missing stage nulls
-    # every later stage, matching the left-join formulation
-    with_click = agg.withColumn(
-        "first_click",
-        F.array_min(F.filter("__clicks", lambda x: x >= F.col("first_view"))),
-    )
-    return with_click.withColumn(
-        "first_purchase",
-        F.array_min(F.filter("__purchases", lambda x: x >= F.col("first_click"))),
-    ).select("user_id", "first_view", "first_click", "first_purchase")
+# ------------------------------------------------- timed by bench.py only
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention: users grouped by first-seen day, distinct
-    active users per day-offset. RETIRED from the driver registry in
-    round 12 (50-slot restoration) — stays DuckDB-diff-tested verbatim
-    in tests/test_retired_queries.py and timed by bench.py."""
+    active users per day-offset. Not in ``queries()``: bench.py times
+    it, and tests/test_retired_queries.py diff-tests it against
+    DuckDB."""
     ev = _t(spark, sf_dir, "events")
     # collapse raw events to each user's distinct-day set first (one
     # shuffle, map-side partial collect_set bounded by calendar days),
@@ -1163,10 +279,9 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_arg_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by/min_by: the order id carrying each priority's extreme
-    price (deterministic argmax without a sort). RETIRED from the
-    driver registry in round 12 (50-slot restoration) — stays
-    DuckDB-diff-tested verbatim in tests/test_retired_queries.py and
-    timed by bench.py."""
+    price (deterministic argmax without a sort). Not in ``queries()``:
+    bench.py times it, and tests/test_retired_queries.py diff-tests it
+    against DuckDB."""
     o = _t(spark, sf_dir, "orders")
     # argmax as max-of-struct: lexicographic struct ordering carries the
     # key along with the extremum in one partial-agg-friendly pass; the
@@ -1192,453 +307,22 @@ def q_arg_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery: orders priced above their priority
-    class average — expressed as an explicit broadcast join of the
-    per-class averages (what decorrelation produces, minus the planner
-    re-deriving it per run: the aggregate is 5 rows, so broadcasting
-    it keeps the fact scan shuffle-free)."""
-    o = _t(spark, sf_dir, "orders")
-    avgs = o.groupBy("o_orderpriority").agg(F.avg("o_totalprice").alias("__avg"))
-    return (
-        o.join(F.broadcast(avgs), "o_orderpriority")
-        .filter(F.col("o_totalprice") > 2 * F.col("__avg"))
-        .select(
-            "o_orderkey",
-            "o_orderpriority",
-            _r6(F.col("o_totalprice")).alias("o_totalprice"),
-        )
-    )
-
-
-def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level token frequency, top 20 (explode + count + top-k).
-    The corpus is spread first — tokenize+explode is CPU-bound."""
-    d = spread(_t(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-    return (
-        d.select(F.explode(toks).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("token"))
-        .limit(20)
-    )
-
-
-def q_dedup_by_url(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L60 URL canonicalization + keep-latest-fetch URL dedup
-    (textops/corpus_io.py `with_url_parts`/`dedup_by_url` — the
-    RefinedWeb/CCNet pre-content dedup pass), oracle-gated per the
-    round-6 verdict, over documents with deterministically
-    synthesized crawl URLs: mixed scheme/host case, tracking params,
-    trailing slashes — plus NULL urls, which must pass through
-    UNDEDUPED (the round-7 correctness fix)."""
-    d = F.col("doc_id")
-    url = F.when(d % 17 == 0, F.lit(None).cast("string")).otherwise(
-        F.concat(
-            F.lit("HTTPS://Site"),
-            (d % 40).cast("string"),
-            F.lit(".Example.COM/p/"),
-            (d % 200).cast("string"),
-            F.when(d % 3 == 0, F.lit("/?utm_source=x&id=1")).otherwise(
-                F.lit("")
-            ),
-        )
-    )
-    fetch = F.timestamp_millis(F.lit(1_700_000_000_000) + d * 1000)
-    crawl = _t(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("url"), fetch.alias("fetch_time")
-    )
-    return dedup_by_url(crawl).select("doc_id", "url")
-
-
-def q_doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L66 trained Cavnar–Trenkle language ID (textops/langid.py),
-    oracle-gated per the round-8 verdict: train per-language char
-    bigram+trigram profiles ON the labeled documents table (its
-    `lang` column is the training label), then classify every
-    document against them by out-of-place distance. End-to-end
-    deterministic — profile ranks break ties (count desc, gram asc),
-    the argmin breaks ties (distance, lang) — so DuckDB reproduces
-    the fit AND the classification bit-identically.
-
-    Two sizing choices, both mirrored in the oracle: training fits on
-    the stable quarter of the corpus (``doc_id % 4 == 0`` — labeled
-    data is always a subset in the real deployment), and the input is
-    ``spread()`` to the session's core count because the test corpus
-    is ONE small parquet file (the gram kernel would otherwise run
-    single-core; measured 9.0 s → 3.0 s at sf0.1). spread, not a bare
-    repartition (round 11): at 100 TB the input arrives
-    pre-partitioned and the guard makes the shuffle a provable no-op
-    instead of a corpus-sized round-robin exchange.
-
-    Round 11: the query returns classify_language_SCORES — the
-    (doc_id, lang_id, lang_id_dist) relation itself — instead of
-    classify_language's re-attaching left join, whose only effect
-    here was a second corpus scan + id exchange + SortMergeJoin
-    feeding a projection that dropped every re-attached column.
-    Output identical (one row per doc_id, gramless docs NULL) —
-    oracle-checked. Equivalence to the oracle's one-row-per-documents-
-    row shape rests on documents.doc_id being a unique, non-NULL key
-    of the corpus — which the generators guarantee and
-    tests/test_round12_opts.py asserts at the oracle-check scale."""
-    from binancedatapipeline_spark.textops.langid import (
-        classify_language_scores,
-        train_language_profiles,
-    )
-
-    docs = spread(_t(spark, sf_dir, "documents"))
-    profiles = train_language_profiles(
-        docs.filter(F.col("doc_id") % 4 == 0),
-        lang_col="lang", text_col="text", top_k=200,
-    )
-    out = classify_language_scores(
-        docs, profiles, id_col="doc_id", text_col="text", top_k=200
-    )
-    return out.select("doc_id", "lang_id", "lang_id_dist")
-
-
-def q_blocklist_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L71 domain blocklist with category attribution
-    (textops/corpus_io.py `parse_blocklist_text` +
-    `with_blocked_domain`), oracle-gated per the round-8 verdict,
-    over documents with deterministically synthesized crawl URLs:
-    mixed host case, www. prefixes, FQDN trailing dots, NULL urls
-    (never blocked) — against a three-list blocklist exercising
-    2/3/4-label entries, subdomain matches, longest-entry-wins
-    overlap (site5.example1.com beats example1.com) and
-    multi-category comma-joining (adult,gambling)."""
-    from binancedatapipeline_spark.textops.corpus_io import (
-        parse_blocklist_text,
-        with_blocked_domain,
-    )
-
-    d = F.col("doc_id")
-    host = F.concat(
-        F.when(d % 3 == 0, F.lit("www.")).otherwise(F.lit("")),
-        F.lit("Site"),
-        (d % 23).cast("string"),
-        F.lit(".Example"),
-        (d % 7).cast("string"),
-        F.lit(".COM"),
-        F.when(d % 5 == 0, F.lit(".")).otherwise(F.lit("")),
-    )
-    url = F.when(d % 17 == 0, F.lit(None).cast("string")).otherwise(
-        F.concat(F.lit("https://"), host, F.lit("/p/"), d.cast("string"))
-    )
-    crawl = _t(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("url")
-    )
-    bl = (
-        parse_blocklist_text(
-            spark, "example3.com\n# comment line\nexample1.com", category="ads"
-        )
-        .unionByName(
-            parse_blocklist_text(spark, "site5.example1.com", category="adult")
-        )
-        .unionByName(
-            parse_blocklist_text(
-                spark,
-                "site5.example1.com\nwww.site6.example2.com",
-                category="gambling",
-            )
-        )
-    )
-    return with_blocked_domain(crawl, bl, category_col="category").select(
-        "doc_id", "url", "blocked_domain", "blocked_category"
-    )
-
-
-def q_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-outer-join semantics (per-user view and error day-counts,
-    users on either side retained) in ONE scan and no join: distinct
-    (user, type, day) triples, then conditional counts per user; a
-    side the user never hit surfaces as NULL exactly like the
-    unmatched side of the full outer."""
-    ev = _t(spark, sf_dir, "events")
-    agg = (
-        ev.filter(F.col("event_type").isin("view", "error"))
-        .select("user_id", "event_type", F.to_date("ts").alias("day"))
-        .distinct()
-        .groupBy("user_id")
-        .agg(
-            # rows are distinct triples, so plain conditional counts
-            # are already distinct-day counts — no Expand needed
-            F.count(F.when(F.col("event_type") == "view", 1)).alias("__vd"),
-            F.count(F.when(F.col("event_type") == "error", 1)).alias("__ed"),
-        )
-    )
-    return agg.select(
-        "user_id",
-        F.when(F.col("__vd") > 0, F.col("__vd")).alias("view_days"),
-        F.when(F.col("__ed") > 0, F.col("__ed")).alias("error_days"),
-    )
-
-
-# ---------------------------------------------------------------- registry
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The registry is pinned at exactly 50 entries — the driver's
-    # CORRECTNESS harness records at most 50 rows, so 50 keeps every
-    # registered query hard-verified. Six twice-driver-green
-    # micro-queries were retired to make room for the training-data
-    # ops; each retired operator stays covered by a registered query
-    # or a direct test: DISTINCT + UNION ALL by cte_margin_shape,
-    # ordered top-k by topk_per_group (+ the TakeOrdered plan test
-    # driving q_topk_orders), ROLLUP by grouping_sets (same Expand
-    # family), rows-frame running sums by wma20 (two such sums),
-    # EXCEPT-shape by anti_join/intersect. Round 5 swapped
-    # doc_fingerprint (whole-doc digest — the identical md5 machinery
-    # is still driver-verified through doc_exact_dedup and doc_rep_map,
-    # and textops.with_fingerprint is diff-tested against hashlib in
-    # tests/test_round5_fixes.py) for doc_rep_map so the
-    # exact-collapse primitive behind near_dedup is oracle-gated.
-    # Round 9 swapped scalar_datemath (pure F1–F4 conversion
-    # projection — every conversion it exercised stays oracle-gated:
-    # interval arithmetic through join_theta, date_trunc through
-    # events_hourly_rollup, date difference through
-    # window_lag_extreme, epoch-ms through wma20/asof_join inputs)
-    # for doc_langid, gating the trained Cavnar–Trenkle language-ID
-    # family end to end (profile fit + out-of-place classification);
-    # and pivot (status→columns conditional aggregation — the same
-    # case-when aggregate machinery stays oracle-gated through
-    # conditional_agg, and the Expand family through grouping_sets)
-    # for blocklist_domains, gating the domain-blocklist family
-    # (longest-entry-wins + multi-category attribution).
-    # Round 7 swapped word_count (corpus token frequency — the same
-    # tokenize→explode→count machinery stays driver-verified through
-    # doc_token_stats and tfidf_top_terms) for dedup_by_url, so the
-    # round-6 crawl-curation family has an oracle-gated representative
-    # (including the round-7 NULL-URL passthrough fix); and semi_join
-    # (EXISTS — the same BroadcastHashJoin build/probe machinery as
-    # the still-registered anti_join, one join-type flag apart) for
-    # doc_duplicate_spans, gating the L53 span-dedup family. Round 8
-    # swapped doc_rolling_fp (rolling-hash fingerprint — the identical
-    # windowed-hash machinery stays oracle-gated through
-    # doc_duplicate_spans) for dsir_scores, gating the DSIR
-    # data-selection family's bucket-distribution statistics; and
-    # approx_distinct (HLL++ sketch — whose exact-vs-sketch contract
-    # keeps full diff-test coverage, and whose multi-distinct
-    # machinery stays oracle-gated through count_distinct) for
-    # sq8_topk, gating the vector-compression family's quantization
-    # grid end to end; and doc_rep_map (exact-collapse rep map — the
-    # identical md5-digest machinery stays oracle-gated through
-    # doc_exact_dedup) for hist_quantiles, gating the mergeable-
-    # sketch family's histogram fit→quantile pipeline. Round 10
-    # swapped groupby_having (HAVING on a grouped aggregate — the
-    # same aggregate-then-filter machinery stays oracle-gated through
-    # conditional_agg + cte_margin_shape, and HAVING-shaped post-agg
-    # predicates through full_outer's day-count filter-free variant)
-    # for host_pagerank, gating the iterative graph family (damped
-    # power iteration with dangling-mass redistribution) end to end
-    # against a DuckDB recursive-CTE oracle. Round 12 retired
-    # cohort_retention (cohort-day bucketing — the identical
-    # collect_set/explode/datediff aggregate machinery stays
-    # oracle-gated through funnel's per-user event-array collapse and
-    # sessionize's date arithmetic) and arg_max (max_by-as-max-of-
-    # struct — the same lexicographic-struct extremum machinery stays
-    # oracle-gated through topk_per_group and the funnel array mins)
-    # after the interrupted round-10/11 build pushed the registry to
-    # 52 entries and silently dropped its LAST two rows out of the
-    # driver's 50-row verification window: 50 registered = every
-    # registered query hard-verified, per this comment's own contract.
-    # All retired queries stay DuckDB-diff-tested verbatim in
-    # tests/test_retired_queries.py, and the two round-12 retirees
-    # also stay TIMED by bench.py (its queries dict is additive-only).
     return {
-        "pricing_summary": q_pricing_summary,
-        "filtered_projection": q_filtered_projection,
-        "join_composite_key": q_join_composite_key,
-        "join_theta": q_join_theta,
-        "join_dims_broadcast": q_join_dims_broadcast,
-        "anti_join": q_anti_join,
-        "doc_duplicate_spans": q_doc_duplicate_spans,
         "dedup_keep_last": q_dedup_keep_last,
-        "scalar_subquery": q_scalar_subquery,
         "window_lag_extreme": q_window_lag_extreme,
         "window_lead_gaps": q_window_lead_gaps,
         "wma20": q_wma20,
-        "dedup_by_url": q_dedup_by_url,
-        "topk_per_group": q_topk_per_group,
         "cte_margin_shape": q_cte_margin_shape,
-        "doc_langid": q_doc_langid,
-        "conditional_agg": q_conditional_agg,
-        "host_pagerank": q_host_pagerank,
-        "full_outer": q_full_outer,
-        "events_hourly_rollup": q_events_hourly_rollup,
         "asof_join": q_asof_join,
-        "sessionize": q_sessionize,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "count_distinct": q_count_distinct,
-        "json_extract": q_json_extract,
-        "doc_exact_dedup": q_doc_exact_dedup,
-        "hist_quantiles": q_hist_quantiles,
-        "doc_token_stats": q_doc_token_stats,
-        "doc_quality": q_doc_quality,
-        "doc_lang_guess": q_doc_lang_guess,
-        "dsir_scores": q_dsir_scores,
-        "doc_simhash": q_doc_simhash,
-        "doc_minhash_sig": q_doc_minhash_sig,
-        "doc_lsh_pairs": q_doc_lsh_pairs,
-        "doc_ngram_jaccard": q_doc_ngram_jaccard,
-        "doc_decontaminate": q_doc_decontaminate,
-        "doc_pack_sequences": q_doc_pack_sequences,
-        "doc_stable_split": q_doc_stable_split,
-        "doc_mixture_sample": q_doc_mixture_sample,
-        "doc_mixture_oversample": q_doc_mixture_oversample,
-        "emb_cosine_topk": q_emb_cosine_topk,
-        "emb_centroid_dist": q_emb_centroid_dist,
-        "emb_near_dup": q_emb_near_dup,
-        "rank_windows": q_rank_windows,
-        "grouping_sets": q_grouping_sets,
-        "sq8_topk": q_sq8_topk,
-        "blocklist_domains": q_blocklist_domains,
-        "percentiles": q_percentiles,
-        "window_range_frame": q_window_range_frame,
-        "funnel": q_funnel,
     }
 
 
 # ---------------------------------------------------------------- oracles
 
-_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
-_H56 = "('0x' || substr(md5({expr}), 1, 14))::BIGINT"
-
-
-def _shingle_cte(n: int = 3) -> str:
-    """DuckDB CTE producing distinct (doc_id, shingle) word n-grams
-    identical to textops.dedup.shingles_df."""
-    return f"""
-__tok AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
-),
-__sh AS (
-  SELECT DISTINCT doc_id, sh AS shingle
-  FROM __tok, UNNEST(
-    list_transform(
-      range(1, greatest(len(toks) - {n - 1}, 1) + 1),
-      i -> array_to_string(toks[i:i+{n - 1}], ' ')
-    )
-  ) AS t(sh)
-)"""
-
 
 def oracle_sql() -> dict[str, str]:
-    lang_hits = []
-    for lang in sorted(LANG_MARKERS):
-        in_list = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
-        lang_hits.append(
-            f"len(list_filter({_TOKS.replace('text', 'lower(text)')}, x -> x IN ({in_list}))) AS __hits_{lang}"
-        )
-    langs = sorted(LANG_MARKERS)
-    best = "CASE WHEN __m = 0 THEN 'und' " + " ".join(
-        f"WHEN __hits_{lang} = __m THEN '{lang}'" for lang in langs
-    ) + " ELSE 'und' END"
-
-    minhash_mins = ",\n         ".join(
-        f"min(({A} * __h + {B}) % {MINHASH_P}) AS h{i}"
-        for i, (A, B) in enumerate(zip(MINHASH_A[:8], MINHASH_B[:8]))
-    )
-
     return {
-        "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity) AS sum_qty,
-       (sum(l_extendedprice::DECIMAL(20,2)))::DOUBLE AS sum_base_price,
-       (sum((l_extendedprice * (1 - l_discount))::DECIMAL(24,6)))::DOUBLE AS sum_disc_price,
-       sum(l_quantity) / count(*) AS avg_qty,
-       (sum(l_extendedprice::DECIMAL(20,2)))::DOUBLE / count(*) AS avg_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1999-12-01'
-GROUP BY l_returnflag, l_linestatus
-""",
-        "filtered_projection": """
-SELECT l_orderkey, l_linenumber, l_returnflag,
-       round(l_extendedprice * (1 - l_discount), 6) AS net_price
-FROM lineitem
-WHERE l_returnflag IN ('R', 'A')
-  AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
-  AND l_quantity > 25
-""",
-        "join_composite_key": """
-WITH hourly AS (
-  SELECT user_id, date_trunc('hour', ts) AS hour, event_type,
-         (sum(value::DECIMAL(18,2)))::DOUBLE AS v, count(*) AS n
-  FROM events WHERE event_type IN ('click', 'view')
-  GROUP BY 1, 2, 3
-)
-SELECT c.user_id, c.hour, c.n AS n_clicks, v.n AS n_views,
-       round(c.v / v.v - 1, 6) AS click_view_premium
-FROM (SELECT * FROM hourly WHERE event_type = 'click') c
-INNER JOIN (SELECT * FROM hourly WHERE event_type = 'view') v
-  ON c.user_id = v.user_id AND c.hour = v.hour
-""",
-        "join_theta": """
-SELECT o_orderpriority, count(*) AS n_lines,
-       (sum((l_extendedprice * (1 - l_discount))::DECIMAL(24,6)))::DOUBLE AS revenue
-FROM lineitem l INNER JOIN orders o
-  ON l.l_orderkey = o.o_orderkey
- AND l.l_shipdate > o.o_orderdate + INTERVAL 5 DAY
-GROUP BY o_orderpriority
-""",
-        "join_dims_broadcast": """
-SELECT r_name AS region, count(*) AS n_customers,
-       (sum(c_acctbal::DECIMAL(20,2)))::DOUBLE / count(*) AS avg_acctbal
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r_name
-""",
-        "anti_join": """
-SELECT c_mktsegment, count(*) AS n_customers
-FROM customer c
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders o
-  WHERE o.o_custkey = c.c_custkey
-    AND o.o_orderdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1995-12-31'
-)
-GROUP BY c_mktsegment
-""",
-        "doc_duplicate_spans": """
-WITH tok AS (
-  SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
-  FROM documents
-),
-win AS (  -- every 8-token window occurrence, 1-based positions
-  SELECT doc_id, i AS pos, array_to_string(t[i:i+7], ' ') AS w
-  FROM tok, UNNEST(range(1, len(t) - 6)) AS r(i)
-  WHERE len(t) >= 8
-),
-c AS (SELECT w, count(*) AS n FROM win GROUP BY w),
-firsts AS (  -- keep-first exemption: min (doc_id, pos) per window text
-  SELECT w, doc_id AS fd, pos AS fp FROM (
-    SELECT w, doc_id, pos,
-           row_number() OVER (PARTITION BY w ORDER BY doc_id, pos) AS rn
-    FROM win
-  ) WHERE rn = 1
-),
-dup AS (
-  SELECT DISTINCT win.doc_id, win.pos
-  FROM win JOIN c USING (w) JOIN firsts USING (w)
-  WHERE c.n >= 2 AND NOT (win.doc_id = firsts.fd AND win.pos = firsts.fp)
-),
-isl AS (  -- gaps-and-islands merge of overlapping windows
-  SELECT doc_id, pos,
-    CASE WHEN lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-          OR pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 8
-         THEN 1 ELSE 0 END AS brk
-  FROM dup
-),
-grp AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-  FROM isl
-)
-SELECT doc_id, min(pos) AS span_start, max(pos) + 7 AS span_end
-FROM grp GROUP BY doc_id, g
-""",
         "dedup_keep_last": """
 SELECT user_id, event_type, ts, event_id, round(value, 6) AS value
 FROM events
@@ -1690,12 +374,6 @@ FROM numbered
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
              ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
 """,
-        "topk_per_group": """
-SELECT o_custkey, o_orderkey, round(o_totalprice, 6) AS o_totalprice,
-       row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)::INTEGER AS rank
-FROM orders
-QUALIFY rank <= 3
-""",
         "cte_margin_shape": """
 WITH ranges AS (
   SELECT l_suppkey, min(l_shipdate) AS first_ship, max(l_shipdate) AS last_ship
@@ -1710,131 +388,6 @@ SELECT * FROM assets
 UNION ALL
 SELECT -1 AS nation, min(first_ship), max(last_ship) FROM assets
 """,
-        "doc_langid": """
-WITH tnorm AS (
-  SELECT lang, ' ' || trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) || ' ' AS s
-  FROM documents WHERE doc_id % 4 = 0
-),
-tgrams AS (
-  SELECT lang, g
-  FROM tnorm, UNNEST(
-    CASE WHEN length(s) > 2 THEN
-      list_concat(
-        list_transform(range(1, length(s)::INT), i -> substr(s, i::INT, 2)),
-        list_transform(range(1, length(s)::INT - 1), i -> substr(s, i::INT, 3))
-      )
-    ELSE CAST([] AS VARCHAR[]) END) AS t(g)
-),
-prof AS (
-  SELECT lang, g AS gram,
-         row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, g) AS rank
-  FROM tgrams GROUP BY lang, g
-  QUALIFY rank <= 200
-),
-dnorm AS (
-  SELECT doc_id, ' ' || trim(regexp_replace(lower(substr(text, 1, 4000)), '\\s+', ' ', 'g')) || ' ' AS s
-  FROM documents
-),
-dgrams AS (
-  SELECT doc_id, g
-  FROM dnorm, UNNEST(
-    CASE WHEN length(s) > 2 THEN
-      list_concat(
-        list_transform(range(1, length(s)::INT), i -> substr(s, i::INT, 2)),
-        list_transform(range(1, length(s)::INT - 1), i -> substr(s, i::INT, 3))
-      )
-    ELSE CAST([] AS VARCHAR[]) END) AS t(g)
-),
-dcount AS (SELECT doc_id, g AS gram, count(*) AS n FROM dgrams GROUP BY doc_id, g),
-dprof AS (
-  SELECT doc_id, gram,
-         row_number() OVER (PARTITION BY doc_id ORDER BY n DESC, gram) AS doc_rank
-  FROM dcount QUALIFY doc_rank <= 200
-),
-sizes AS (SELECT doc_id, count(*) AS dg FROM dprof GROUP BY doc_id),
-langs AS (SELECT DISTINCT lang FROM prof),
-hits AS (
-  SELECT dp.doc_id, p.lang,
-         sum(abs(dp.doc_rank - p.rank)) AS hd, count(*) AS h
-  FROM dprof dp JOIN prof p USING (gram)
-  GROUP BY dp.doc_id, p.lang
-),
-scored AS (
-  SELECT s.doc_id, l.lang,
-         (coalesce(hd, 0) + (s.dg - coalesce(h, 0)) * 200)::BIGINT AS dist
-  FROM sizes s CROSS JOIN langs l
-  LEFT JOIN hits ON hits.doc_id = s.doc_id AND hits.lang = l.lang
-),
-best AS (
-  SELECT doc_id, lang, dist,
-         row_number() OVER (PARTITION BY doc_id ORDER BY dist, lang) AS rn
-  FROM scored
-)
-SELECT d.doc_id, b.lang AS lang_id, b.dist AS lang_id_dist
-FROM documents d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
-""",
-        "conditional_agg": """
-SELECT user_id,
-       round((sum((CASE WHEN event_type = 'click' THEN value ELSE 0.0 END)::DECIMAL(18,2)))::DOUBLE, 6) AS click_value,
-       round((sum((CASE WHEN event_type = 'view' THEN value ELSE 0.0 END)::DECIMAL(18,2)))::DOUBLE, 6) AS view_value,
-       round((sum((CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END)::DECIMAL(18,2)))::DOUBLE, 6) AS purchase_value,
-       count(*) AS n_events
-FROM events GROUP BY user_id
-""",
-        # host_pagerank: the same damped power iteration pagerank()
-        # runs, as a recursive CTE. Per-step state is the previous
-        # iteration's 37 rank rows; each step cross-joins them to the
-        # node list once, so contributions (LEFT JOIN on the weighted
-        # edge) and the dangling-mass scalar (CASE over the same
-        # cross product) come from a SINGLE reference to the
-        # recursive table, as required. NOTE: `nodes` must be
-        # DISTINCT-over-UNION-ALL — inside a WITH RECURSIVE clause
-        # DuckDB 1.0 treats a plain `A UNION B` CTE with recursive
-        # machinery and skips the dedup.
-        "host_pagerank": """
-WITH RECURSIVE
-base AS (
-  SELECT doc_id % 29 AS s, (doc_id * 13 + 7) % 37 AS t FROM documents
-),
-edges AS (
-  SELECT DISTINCT 'host' || CAST(s AS VARCHAR) AS src,
-                  'host' || CAST(t AS VARCHAR) AS dst
-  FROM base WHERE s <> t
-),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges
-  )
-),
-w AS (SELECT src, dst, 1.0 / COUNT(*) OVER (PARTITION BY src) AS w FROM edges),
-dang AS (SELECT node FROM nodes WHERE node NOT IN (SELECT DISTINCT src FROM edges)),
-nn AS (SELECT COUNT(*) AS n FROM nodes),
-ranks(iter, node, rank) AS (
-  SELECT 0, node, 1.0 / (SELECT n FROM nn) FROM nodes
-  UNION ALL
-  SELECT r.iter + 1, n.node,
-         (1.0 / (SELECT n FROM nn)) *
-           (0.15 + 0.85 * SUM(CASE WHEN r.node IN (SELECT node FROM dang) THEN r.rank ELSE 0 END))
-         + 0.85 * SUM(COALESCE(w.w, 0) * r.rank)
-  FROM ranks r
-  CROSS JOIN nodes n
-  LEFT JOIN w ON w.src = r.node AND w.dst = n.node
-  WHERE r.iter < 8
-  GROUP BY r.iter, n.node
-)
-SELECT node, ROUND(rank, 6) AS rank FROM ranks WHERE iter = 8
-""",
-        "events_hourly_rollup": """
-SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-       round((sum(value::DECIMAL(18,2)))::DOUBLE, 6) AS sum_value,
-       min(value) AS min_value,
-       max(value) AS max_value,
-       -- 6dp half-up on the integer cent grid (matches the Spark
-       -- side's exact-integer rounding; see q_events_hourly_rollup)
-       ((sum(CAST(round(value * 100) AS BIGINT)) * 20000 + count(*))
-        // (2 * count(*)))::DOUBLE / 1e6 AS avg_value
-FROM events GROUP BY 1, 2
-""",
         "asof_join": """
 WITH purchases AS (
   SELECT user_id, ts AS p_ts, value AS p_value FROM events WHERE event_type = 'purchase'
@@ -1846,501 +399,5 @@ SELECT p.user_id, p.p_ts, round(p.p_value, 6) AS p_value,
        v.v_ts AS matched_v_ts, round(v.v_value, 6) AS v_value
 FROM purchases p ASOF LEFT JOIN views v
   ON p.user_id = v.user_id AND p.p_ts >= v.v_ts
-""",
-        "sessionize": """
-WITH marked AS (
-  SELECT user_id, ts, event_id, value,
-         CASE WHEN epoch_ms(ts) - epoch_ms(lag(ts, 1) OVER w) IS NULL
-                OR epoch_ms(ts) - epoch_ms(lag(ts, 1) OVER w) > 1800000
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sessioned AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM marked
-)
-SELECT user_id, session_id::BIGINT AS session_id, count(*) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end,
-       round((sum(value::DECIMAL(18,2)))::DOUBLE, 6) AS session_value
-FROM sessioned GROUP BY user_id, session_id
-""",
-        "tfidf_top_terms": r"""
-WITH tok AS (
-  SELECT doc_id, t AS term
-  FROM documents,
-       UNNEST(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS u(t)
-  WHERE length(t) > 0
-),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf,
-         tf.tf * (ln((1 + n.n)::DOUBLE / (1 + dfq.df)) + 1) AS tfidf
-  FROM tf JOIN dfq USING (term) CROSS JOIN n
-)
-SELECT doc_id, term, tf, round(tfidf, 6) AS tfidf,
-       row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS term_rank
-FROM scored QUALIFY term_rank <= 3
-""",
-        "count_distinct": """
-SELECT l_suppkey, count(DISTINCT l_partkey) AS n_parts,
-       count(DISTINCT l_orderkey) AS n_orders
-FROM lineitem GROUP BY l_suppkey
-""",
-        "json_extract": """
-SELECT event_id, json_extract_string(props, '$.k')::INTEGER AS k
-FROM events
-WHERE json_extract_string(props, '$.k')::INTEGER > 50
-""",
-        "doc_exact_dedup": """
-SELECT md5(text) AS digest, min(doc_id) AS canonical_id, count(*) AS n_copies
-FROM documents GROUP BY md5(text)
-""",
-        "hist_quantiles": """
-WITH h AS (
-  SELECT event_type,
-         CASE WHEN value < 0.0::DOUBLE THEN -1
-              WHEN value >= 500.0::DOUBLE THEN 40
-              ELSE CAST(floor((value - 0.0::DOUBLE)
-                   / ((500.0::DOUBLE - 0.0::DOUBLE) / 40)) AS INTEGER)
-         END AS bin,
-         count(*) AS cnt
-  FROM events
-  WHERE value IS NOT NULL AND NOT isnan(value)
-  GROUP BY 1, 2
-),
-c AS (
-  SELECT event_type, q, bin, cnt,
-         sum(cnt) OVER (PARTITION BY event_type, q ORDER BY bin) AS cum,
-         sum(cnt) OVER (PARTITION BY event_type, q) AS total
-  FROM h CROSS JOIN (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE]) AS q)
-),
-sel AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type, q ORDER BY bin) AS rn
-  FROM (SELECT *, total * q AS target FROM c)
-  WHERE cum >= target
-)
-SELECT event_type, q,
-       CASE WHEN bin < 0 THEN 0.0::DOUBLE
-            WHEN bin >= 40 THEN 500.0::DOUBLE
-            ELSE least(greatest(
-                 0.0::DOUBLE + (bin + (target - (cum - cnt)) / cnt)
-                   * ((500.0::DOUBLE - 0.0::DOUBLE) / 40),
-                 0.0::DOUBLE), 500.0::DOUBLE)
-       END AS q_est
-FROM sel WHERE rn = 1
-""",
-        "doc_token_stats": f"""
-SELECT doc_id,
-       len({_TOKS})::INTEGER AS n_tokens,
-       len(string_split_regex(trim(regexp_replace(text,
-           '([^\\sA-Za-z0-9]|\\d+)', ' \\1 ', 'g')), '\\s+'))::INTEGER AS n_bpe_ish
-FROM documents
-""",
-        "doc_quality": f"""
-WITH base AS (
-  SELECT doc_id,
-         length(text) AS n_chars,
-         len({_TOKS}) AS n_tokens,
-         length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha
-  FROM documents
-)
-SELECT doc_id, n_tokens::INTEGER AS n_tokens,
-       round(n_alpha / greatest(n_tokens, 1), 6) AS mean_token_len,
-       round(n_punct / greatest(n_chars, 1), 6) AS punct_ratio,
-       round(n_alpha / greatest(n_chars, 1), 6) AS alpha_ratio,
-       round(least(n_tokens / 200.0, 1.0) * 0.4
-             + (n_alpha / greatest(n_chars, 1)) * 0.4
-             + (1 - least(n_punct / greatest(n_chars, 1) * 5, 1.0)) * 0.2, 6) AS quality_score
-FROM base
-""",
-        "doc_lang_guess": f"""
-WITH hits AS (
-  SELECT doc_id, lang,
-         {', '.join(lang_hits)}
-  FROM documents
-),
-best AS (
-  SELECT *, greatest({', '.join('__hits_' + lang for lang in langs)}) AS __m
-  FROM hits
-)
-SELECT doc_id, lang, {best} AS lang_guess FROM best
-""",
-        "dsir_scores": f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-grams AS (
-  SELECT doc_id, g FROM tok, UNNEST(toks) AS u(g) WHERE g <> ''
-  UNION ALL
-  SELECT doc_id, g FROM tok, UNNEST(
-    list_transform(range(1, greatest(len(toks) - 1, 1) + 1),
-                   i -> array_to_string(toks[i:i+1], ' '))
-  ) AS u(g) WHERE g <> ''
-),
-bucketed AS (
-  SELECT doc_id, {_H56.format(expr='g')} % 512 AS bucket FROM grams
-),
-tdist AS (SELECT bucket, count(*) AS t_n FROM bucketed WHERE doc_id % 50 = 0 GROUP BY 1),
-rdist AS (SELECT bucket, count(*) AS r_n FROM bucketed GROUP BY 1),
-tot AS (SELECT (SELECT coalesce(sum(t_n), 0) FROM tdist) AS t_total,
-               (SELECT coalesce(sum(r_n), 0) FROM rdist) AS r_total),
-ratio AS (
-  -- every scored bucket is in rdist (the raw fit corpus IS the scored
-  -- corpus), so the smoothed default for absent-from-both never fires
-  SELECT r.bucket,
-         ln((coalesce(t.t_n, 0) + 0.5) / (tot.t_total + 0.5 * 512))
-       - ln((r.r_n + 0.5) / (tot.r_total + 0.5 * 512)) AS log_ratio
-  FROM rdist r LEFT JOIN tdist t USING (bucket) CROSS JOIN tot
-),
-scored AS (
-  SELECT b.doc_id, sum(ratio.log_ratio) AS s
-  FROM bucketed b JOIN ratio USING (bucket) GROUP BY 1
-)
-SELECT d.doc_id, round(coalesce(scored.s, 0.0), 6) AS dsir_logw
-FROM documents d LEFT JOIN scored USING (doc_id)
-""",
-        "doc_simhash": f"""
-WITH tok AS (
-  SELECT doc_id, t.tok, {_H56.format(expr='t.tok')} AS th
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents), UNNEST(toks) AS t(tok)
-),
-bits AS (
-  SELECT doc_id, i.i,
-         sum(CASE WHEN (th >> i.i) & 1 = 1 THEN 1 ELSE -1 END) AS s
-  FROM tok, (SELECT unnest(range(0, 32)) AS i) AS i
-  GROUP BY doc_id, i.i
-)
-SELECT doc_id,
-       sum(CASE WHEN s > 0 THEN (1::BIGINT << i) ELSE 0 END)::BIGINT AS simhash
-FROM bits GROUP BY doc_id
-""",
-        "doc_minhash_sig": f"""
-WITH {_shingle_cte(3)},
-__hd AS (
-  SELECT doc_id, {_H56.format(expr='shingle')} % {MINHASH_P} AS __h FROM __sh
-),
-sig AS (
-  SELECT doc_id,
-         {minhash_mins}
-  FROM __hd GROUP BY doc_id
-)
-SELECT doc_id, h0 AS mh0, h1 AS mh1, h2 AS mh2, h3 AS mh3 FROM sig
-""",
-        "doc_lsh_pairs": f"""
-WITH {_shingle_cte(3)},
-__hd AS (
-  SELECT doc_id, {_H56.format(expr='shingle')} % {MINHASH_P} AS __h FROM __sh
-),
-sig AS (
-  SELECT doc_id,
-         {minhash_mins}
-  FROM __hd GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, 0 AS band, md5(h0::VARCHAR || ',' || h1::VARCHAR) AS bh FROM sig
-  UNION ALL
-  SELECT doc_id, 1, md5(h2::VARCHAR || ',' || h3::VARCHAR) FROM sig
-  UNION ALL
-  SELECT doc_id, 2, md5(h4::VARCHAR || ',' || h5::VARCHAR) FROM sig
-  UNION ALL
-  SELECT doc_id, 3, md5(h6::VARCHAR || ',' || h7::VARCHAR) FROM sig
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-WHERE a.doc_id < b.doc_id
-""",
-        "doc_ngram_jaccard": f"""
-WITH {_shingle_cte(3)},
-hashed AS (
-  SELECT doc_id, {_H56.format(expr='shingle')} AS sh_hash FROM __sh
-),
-sizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM hashed GROUP BY doc_id
-),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM hashed a JOIN hashed b ON a.sh_hash = b.sh_hash
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, n_common,
-       sa.n_sh AS n_a, sb.n_sh AS n_b,
-       round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
-FROM common
-JOIN sizes sa ON common.id_a = sa.doc_id
-JOIN sizes sb ON common.id_b = sb.doc_id
-WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.2
-""",
-        "doc_decontaminate": f"""
-WITH {_shingle_cte(3)},
-bench AS (
-  SELECT DISTINCT {_H56.format(expr='shingle')} AS sh_hash
-  FROM __sh WHERE doc_id % 50 = 0
-)
-SELECT s.doc_id, count(*) AS n_hits
-FROM (
-  SELECT doc_id, {_H56.format(expr='shingle')} AS sh_hash
-  FROM __sh WHERE doc_id % 50 <> 0
-) s
-JOIN bench USING (sh_hash)
-GROUP BY 1
-""",
-        "doc_pack_sequences": f"""
-WITH t AS (
-  SELECT doc_id, lang, source, len({_TOKS}) AS n_tokens FROM documents
-),
-c AS (
-  SELECT *, sum(n_tokens) OVER (PARTITION BY lang, source ORDER BY doc_id) AS cum
-  FROM t
-)
-SELECT lang, source, CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS seq_id,
-       count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS seq_tokens
-FROM c GROUP BY 1, 2, 3
-""",
-        "doc_stable_split": """
-WITH b AS (
-  SELECT *, ('0x' || substr(md5(doc_id::VARCHAR), 1, 14))::BIGINT % 100 AS __b
-  FROM documents
-)
-SELECT CASE WHEN __b < 80 THEN 'train' WHEN __b < 90 THEN 'val' ELSE 'test' END AS split,
-       lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars
-FROM b GROUP BY 1, 2
-""",
-        "doc_mixture_sample": """
-WITH b AS (
-  SELECT *, ('0x' || substr(md5(doc_id::VARCHAR), 1, 14))::BIGINT % 10000 AS __b
-  FROM documents
-)
-SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars
-FROM b
-WHERE __b < CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 5000
-                        WHEN 'src2' THEN 2500 ELSE 1000 END
-GROUP BY source
-""",
-        "doc_mixture_oversample": """
-WITH b AS (
-  SELECT *, ('0x' || substr(md5(doc_id::VARCHAR), 1, 14))::BIGINT % 10000 AS __b
-  FROM documents
-), c AS (
-  SELECT *,
-         (CASE source WHEN 'src0' THEN 2 ELSE 1 END
-          + CASE WHEN __b < (CASE source WHEN 'src0' THEN 5000
-                                         WHEN 'src1' THEN 2500 ELSE 0 END)
-                 THEN 1 ELSE 0 END) AS n_copies
-  FROM b
-), e AS (
-  SELECT source, doc_id, n_chars, unnest(range(0, n_copies)) AS copy_idx FROM c
-)
-SELECT source, count(*) AS n_rows, count(DISTINCT doc_id) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS chars
-FROM e GROUP BY source
-""",
-        "emb_cosine_topk": """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < 3
-),
-c AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings),
-scored AS (
-  SELECT query_id, vec_id,
-         list_dot_product(cv, qv)
-           / (sqrt(list_dot_product(cv, cv)) * sqrt(list_dot_product(qv, qv))) AS cosine
-  FROM c CROSS JOIN q
-)
-SELECT query_id, vec_id, round(cosine, 6) AS cosine,
-       row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id)::INTEGER AS rank
-FROM scored
-QUALIFY rank <= 10
-""",
-        "emb_centroid_dist": """
-WITH pos AS (SELECT unnest(range(0, 64)) AS pos),
-exploded AS (
-  SELECT label, pos, embedding[pos + 1]::DOUBLE AS v
-  FROM embeddings CROSS JOIN pos
-),
-centroid AS (
-  SELECT label, list(c ORDER BY pos) AS centroid
-  FROM (SELECT label, pos, avg(v) AS c FROM exploded GROUP BY label, pos)
-  GROUP BY label
-)
-SELECT e.vec_id, e.label,
-       round(
-         list_dot_product(e.embedding::DOUBLE[], c.centroid)
-         / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-            * sqrt(list_dot_product(c.centroid, c.centroid))), 6) AS cosine_to_centroid
-FROM embeddings e JOIN centroid c ON e.label = c.label
-""",
-        "emb_near_dup": """
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-             / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))), 6) AS cosine
-FROM embeddings a JOIN embeddings b ON a.label = b.label
-WHERE a.vec_id < b.vec_id
-  AND list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-      / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-         * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))) >= 0.3
-""",
-        "rank_windows": """
-SELECT o_orderpriority, o_orderkey,
-       rank() OVER w AS price_rank,
-       dense_rank() OVER w AS price_dense_rank,
-       ntile(4) OVER w AS price_quartile
-FROM orders
-WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey)
-QUALIFY price_rank <= 20
-""",
-        "grouping_sets": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity) AS sum_qty, count(*) AS n
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-""",
-        "sq8_topk": """
-WITH pos AS (SELECT unnest(range(1, 65)) AS i),
-exploded AS (
-  SELECT vec_id, i, embedding[i]::DOUBLE AS x FROM embeddings CROSS JOIN pos
-),
-params AS (
-  SELECT i, min(x) AS lo, (max(x) - min(x)) / 255.0 AS sc
-  FROM exploded GROUP BY i
-),
-recon AS (
-  SELECT e.vec_id,
-         list(CASE WHEN p.sc = 0.0 THEN p.lo
-              ELSE p.lo + least(255, greatest(0, round((e.x - p.lo) / p.sc))) * p.sc
-              END ORDER BY e.i) AS rv
-  FROM exploded e JOIN params p USING (i)
-  GROUP BY e.vec_id
-),
-q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < 3
-),
-scored AS (
-  SELECT query_id, vec_id,
-         list_dot_product(rv, qv)
-           / (sqrt(list_dot_product(rv, rv)) * sqrt(list_dot_product(qv, qv))) AS cosine
-  FROM recon CROSS JOIN q
-)
-SELECT query_id, vec_id, round(cosine, 6) AS cosine,
-       row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id)::INTEGER AS rank
-FROM scored
-QUALIFY rank <= 10
-""",
-        "blocklist_domains": """
-WITH raw AS (
-  SELECT doc_id,
-         (CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END)
-         || 'Site' || (doc_id % 23)::VARCHAR
-         || '.Example' || (doc_id % 7)::VARCHAR || '.COM'
-         || (CASE WHEN doc_id % 5 = 0 THEN '.' ELSE '' END) AS h
-  FROM documents
-),
-docs AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 17 = 0 THEN NULL
-              ELSE 'https://' || h || '/p/' || doc_id::VARCHAR END AS url,
-         CASE WHEN doc_id % 17 = 0 THEN NULL
-              ELSE regexp_replace(lower(h), '\\.+$', '') END AS host
-  FROM raw
-),
-bl AS (
-  SELECT domain, string_agg(DISTINCT category, ',' ORDER BY category) AS category
-  FROM (VALUES ('example3.com', 'ads'), ('example1.com', 'ads'),
-               ('site5.example1.com', 'adult'), ('site5.example1.com', 'gambling'),
-               ('www.site6.example2.com', 'gambling')) t(domain, category)
-  GROUP BY domain
-),
-m AS (
-  SELECT d.doc_id, b.domain, b.category,
-         row_number() OVER (PARTITION BY d.doc_id ORDER BY length(b.domain) DESC) AS rn
-  FROM docs d JOIN bl b
-    ON d.host = b.domain OR ends_with(d.host, '.' || b.domain)
-)
-SELECT d.doc_id, d.url, m.domain AS blocked_domain, m.category AS blocked_category
-FROM docs d LEFT JOIN (SELECT * FROM m WHERE rn = 1) m USING (doc_id)
-""",
-        "percentiles": """
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.5), 6) AS p50_price,
-       round(quantile_cont(o_totalprice, 0.9), 6) AS p90_price,
-       count(*) AS n
-FROM orders GROUP BY o_orderpriority
-""",
-        "window_range_frame": """
-SELECT event_id, user_id, ts,
-       round(sum(value) OVER (
-         PARTITION BY user_id ORDER BY epoch_us(ts) // 1000000
-         RANGE BETWEEN 7200 PRECEDING AND CURRENT ROW), 6) AS trailing_2h_value
-FROM events
-""",
-        "funnel": """
-WITH v AS (
-  SELECT user_id, min(ts) AS first_view FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-),
-fc AS (
-  SELECT c.user_id, v.first_view, min(c.ts) AS first_click
-  FROM events c JOIN v ON c.user_id = v.user_id
-  WHERE c.event_type = 'click' AND c.ts >= v.first_view
-  GROUP BY c.user_id, v.first_view
-),
-fp AS (
-  SELECT p.user_id, min(p.ts) AS first_purchase
-  FROM events p JOIN fc ON p.user_id = fc.user_id
-  WHERE p.event_type = 'purchase' AND p.ts >= fc.first_click
-  GROUP BY p.user_id
-)
-SELECT v.user_id, v.first_view, fc.first_click, fp.first_purchase
-FROM v LEFT JOIN fc ON v.user_id = fc.user_id
-LEFT JOIN fp ON v.user_id = fp.user_id
-""",
-        "scalar_subquery": """
-SELECT o_orderkey, o_orderpriority, round(o_totalprice, 6) AS o_totalprice
-FROM orders o
-WHERE o_totalprice > 2 * (
-  SELECT avg(o_totalprice) FROM orders i
-  WHERE i.o_orderpriority = o.o_orderpriority
-)
-""",
-        "dedup_by_url": """
-WITH u AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 17 = 0 THEN NULL
-              ELSE 'HTTPS://Site' || (doc_id % 40) || '.Example.COM/p/' || (doc_id % 200)
-                   || CASE WHEN doc_id % 3 = 0 THEN '/?utm_source=x&id=1' ELSE '' END
-         END AS url
-  FROM documents
-),
-c AS (  -- independent canonicalization: lowercase scheme+host, trailing-slash
-        -- strip, tracking-param drop (utm_source removed, id kept)
-  SELECT doc_id, url,
-         'https://site' || (doc_id % 40) || '.example.com/p/' || (doc_id % 200)
-         || CASE WHEN doc_id % 3 = 0 THEN '?id=1' ELSE '' END AS canon
-  FROM u WHERE url IS NOT NULL
-)
-SELECT doc_id, url FROM (
-  SELECT doc_id, url,
-         row_number() OVER (PARTITION BY canon ORDER BY doc_id DESC) AS rn
-  FROM c
-) WHERE rn = 1
-UNION ALL
-SELECT doc_id, url FROM u WHERE url IS NULL  -- URL-less rows pass through undeduped
-""",
-        "full_outer": """
-WITH v AS (
-  SELECT user_id, count(DISTINCT ts::DATE) AS view_days
-  FROM events WHERE event_type = 'view' GROUP BY user_id
-),
-e AS (
-  SELECT user_id, count(DISTINCT ts::DATE) AS error_days
-  FROM events WHERE event_type = 'error' GROUP BY user_id
-)
-SELECT coalesce(v.user_id, e.user_id) AS user_id, v.view_days, e.error_days
-FROM v FULL OUTER JOIN e ON v.user_id = e.user_id
 """,
     }

@@ -1,20 +1,19 @@
-"""binancedatapipeline_spark — a PySpark-native analytics engine.
+"""binancedatapipeline_spark — an hourly market-data engine on PySpark.
 
-A from-scratch re-expression of the query and data-processing
-capabilities of the reference Binance market-data pipeline
-(albusmaxgrangerthu/binancedatapipeline) on Apache Spark:
+A from-scratch re-expression of the reference Binance market-data
+pipeline (albusmaxgrangerthu/binancedatapipeline) on Apache Spark:
 
 - relational table model with declared schemas and primary keys
-  (``catalog.TableSpec``), stored as parquet;
-- incremental PK-upsert ingestion semantics (``operators.upsert``);
-- the analytics surface: equi/theta joins, grouped aggregation,
-  LAG/LEAD offset windows, rolling weighted-moving-average windows,
-  dedup-by-key, CTE pipelines, gap detection (``plans/``);
-- scheduled micro-batch lifecycle via Structured Streaming
-  (``streaming/``);
-- plus large-scale training-data operations (dedup, similarity
-  search, text analysis, multimodal plumbing) in ``textops/`` and
-  ``operators/``.
+  (``catalog.TableSpec``), stored as manifest-committed parquet
+  (``warehouse``);
+- incremental kline and funding fetches (``sources``) PK-upserted
+  every tick (``pipeline``, ``operators.upsert``);
+- the analytics surface: the perp-vs-spot premium and its WMA-120,
+  funding-squeeze detection, gap audits, margin assets (``plans/``);
+- the alert loop and micro-batch ingestion via Structured Streaming
+  (``streaming/``), with Telegram notification (``notifications``);
+- a process entry point with the scheduler and maintenance verbs
+  (``cli``).
 
 Everything is expressed through the DataFrame / Spark SQL API so
 Catalyst plans it (predicate pushdown, column pruning, broadcast

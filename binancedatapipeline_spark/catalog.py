@@ -456,22 +456,3 @@ BN_MARGIN_INTEREST_RATES = _register(
         stats_columns=("asset",),
     )
 )
-
-MODEL_REGISTRY = _register(
-    TableSpec(
-        name="model_registry",
-        primary_keys=("model_name", "version"),
-        schema=_schema(
-            {
-                "model_name": "string",
-                "version": "bigint",
-                "path": "string",
-                "model_kind": "string",
-                "params_json": "string",
-                "registered_at": "timestamp",
-            }
-        ),
-        kind="derived",
-        needs_incremental=False,
-    )
-)

@@ -148,84 +148,6 @@ def build_parser() -> argparse.ArgumentParser:
         "run again to redo)",
     )
     rb.add_argument("--table", required=True)
-
-    fl = sub.add_parser(
-        "fit-langid",
-        help="fit language-ID n-gram profiles from a labeled corpus and "
-        "persist them as a model table (models.save_language_profiles) — "
-        "downstream jobs and the streaming curation sink then LOAD the "
-        "stored profiles instead of refitting per run",
-    )
-    fl.add_argument("--corpus", required=True,
-                    help="parquet path with (lang, text) columns")
-    fl.add_argument("--out", required=True, help="model directory to create")
-    fl.add_argument("--top-k", type=int, default=300)
-    fl.add_argument("--overwrite", action="store_true")
-    fl.add_argument("--register", metavar="NAME", default=None,
-                    help="also register the artifact in the warehouse "
-                    "model_registry under NAME (auto-incremented version)")
-
-    fq = sub.add_parser(
-        "fit-quality",
-        help="fit the fastText-style quality classifier from labeled "
-        "parquet corpora and persist it through the model seam "
-        "(models.save_quality_classifier); scoring jobs then LOAD the "
-        "stored classifier instead of refitting per run",
-    )
-    fq.add_argument("--positive", required=True,
-                    help="parquet path of reference-quality documents (text column)")
-    fq.add_argument("--negative", required=True,
-                    help="parquet path of crawl-junk documents (text column)")
-    fq.add_argument("--out", required=True, help="model directory to create")
-    fq.add_argument("--text-col", default="text")
-    fq.add_argument("--num-features", type=int, default=1 << 18)
-    fq.add_argument("--max-iter", type=int, default=50)
-    fq.add_argument("--overwrite", action="store_true")
-    fq.add_argument("--register", metavar="NAME", default=None,
-                    help="also register in the warehouse model_registry")
-
-    fb = sub.add_parser(
-        "fit-bpe",
-        help="learn BPE merges from a corpus and persist the ordered "
-        "merge list (models.save_bpe_merges) — tokenization jobs load "
-        "the stored merges instead of re-running the corpus word count",
-    )
-    fb.add_argument("--corpus", required=True,
-                    help="parquet path with a text column")
-    fb.add_argument("--out", required=True, help="model directory to create")
-    fb.add_argument("--text-col", default="text")
-    fb.add_argument("--num-merges", type=int, default=100)
-    fb.add_argument("--overwrite", action="store_true")
-    fb.add_argument("--register", metavar="NAME", default=None,
-                    help="also register in the warehouse model_registry")
-
-    fi = sub.add_parser(
-        "fit-ivf",
-        help="train IVF centroids over an embedding corpus and persist "
-        "them (models.save_ivf_centroids); --distributed runs "
-        "full-corpus pyspark.ml KMeans instead of the driver-sample "
-        "Lloyd's",
-    )
-    fi.add_argument("--corpus", required=True,
-                    help="parquet path with an embedding array column")
-    fi.add_argument("--out", required=True, help="model directory to create")
-    fi.add_argument("--vec-col", default="embedding")
-    fi.add_argument("--n-cells", type=int, default=16)
-    fi.add_argument("--iters", type=int, default=10)
-    fi.add_argument("--distributed", action="store_true",
-                    help="full-corpus KMeans (the 100 TB train path)")
-    fi.add_argument("--overwrite", action="store_true")
-    fi.add_argument("--register", metavar="NAME", default=None,
-                    help="also register in the warehouse model_registry")
-
-    mv = sub.add_parser(
-        "model",
-        help="resolve a registered model by name (latest or pinned "
-        "version), or list the whole registry",
-    )
-    mv.add_argument("--name", default=None,
-                    help="model name to resolve; omit to list all rows")
-    mv.add_argument("--version", type=int, default=None)
     return p
 
 
@@ -276,99 +198,4 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None,
     elif args.command == "rollback":
         pipe.warehouse.rollback(args.table)
         out(f"{args.table}: rolled back to the previous version")
-    elif args.command == "fit-langid":
-        from binancedatapipeline_spark import models
-        from binancedatapipeline_spark.textops.langid import (
-            train_language_profiles,
-        )
-
-        corpus = spark.read.parquet(args.corpus)
-        profiles = train_language_profiles(corpus, top_k=args.top_k)
-        models.save_language_profiles(
-            profiles, args.out, overwrite=args.overwrite
-        )
-        n = spark.read.parquet(f"{args.out.rstrip('/')}/data").count()
-        out(f"fit-langid: {n} profile rows saved to {args.out}")
-        if args.register:
-            row = models.register_model(pipe.warehouse, args.register, args.out)
-            out(f"registered {args.register} v{row['version']}")
-    elif args.command == "fit-quality":
-        from binancedatapipeline_spark import models
-        from binancedatapipeline_spark.textops.quality_clf import (
-            train_quality_classifier,
-        )
-
-        clf = train_quality_classifier(
-            spark.read.parquet(args.positive),
-            spark.read.parquet(args.negative),
-            text_col=args.text_col,
-            num_features=args.num_features,
-            max_iter=args.max_iter,
-        )
-        models.save_quality_classifier(clf, args.out, overwrite=args.overwrite)
-        out(f"fit-quality: classifier ({args.num_features} features, "
-            f"n_max={clf.n_max}) saved to {args.out}")
-        if args.register:
-            row = models.register_model(pipe.warehouse, args.register, args.out)
-            out(f"registered {args.register} v{row['version']}")
-    elif args.command == "fit-bpe":
-        from binancedatapipeline_spark import models
-        from binancedatapipeline_spark.textops.bpe import train_bpe
-
-        merges = train_bpe(
-            spark.read.parquet(args.corpus),
-            text_col=args.text_col,
-            num_merges=args.num_merges,
-        )
-        models.save_bpe_merges(spark, merges, args.out,
-                               overwrite=args.overwrite)
-        out(f"fit-bpe: {len(merges)} merges saved to {args.out}")
-        if args.register:
-            row = models.register_model(pipe.warehouse, args.register, args.out)
-            out(f"registered {args.register} v{row['version']}")
-    elif args.command == "fit-ivf":
-        from binancedatapipeline_spark import models
-        from binancedatapipeline_spark.similarity import (
-            train_ivf_centroids,
-            train_ivf_centroids_distributed,
-        )
-
-        corpus = spark.read.parquet(args.corpus)
-        if args.distributed:
-            cent = train_ivf_centroids_distributed(
-                corpus, n_cells=args.n_cells, vec_col=args.vec_col,
-                iters=args.iters,
-            )
-        else:
-            cent = train_ivf_centroids(
-                corpus, n_cells=args.n_cells, vec_col=args.vec_col,
-                iters=args.iters,
-            )
-        models.save_ivf_centroids(spark, cent, args.out,
-                                  overwrite=args.overwrite)
-        out(f"fit-ivf: {cent.shape[0]}x{cent.shape[1]} centroids "
-            f"({'distributed' if args.distributed else 'sampled'}) "
-            f"saved to {args.out}")
-        if args.register:
-            row = models.register_model(pipe.warehouse, args.register, args.out)
-            out(f"registered {args.register} v{row['version']}")
-    elif args.command == "model":
-        from binancedatapipeline_spark import models
-
-        if args.name:
-            row = models.resolve_model(pipe.warehouse, args.name,
-                                       version=args.version)
-            out(f"{row['model_name']} v{row['version']} "
-                f"kind={row['model_kind']} path={row['path']} "
-                f"params={row['params']}")
-        else:
-            if pipe.warehouse.exists(catalog.MODEL_REGISTRY.name):
-                rows = (pipe.warehouse.read(catalog.MODEL_REGISTRY)
-                        .orderBy("model_name", "version").collect())
-            else:
-                rows = []
-            for r in rows:
-                out(f"{r['model_name']} v{r['version']} "
-                    f"kind={r['model_kind']} path={r['path']}")
-            out(f"model: {len(rows)} registration(s)")
     return 0

@@ -10,14 +10,6 @@ from binancedatapipeline_spark.operators.gaps import find_time_gaps
 from binancedatapipeline_spark.operators.upsert import upsert
 from binancedatapipeline_spark.operators.wma import with_wma
 from binancedatapipeline_spark.operators.asof import asof_join
-from binancedatapipeline_spark.operators.components import connected_components
-from binancedatapipeline_spark.operators.pagerank import pagerank
-from binancedatapipeline_spark.operators._checkpoint import release
-from binancedatapipeline_spark.operators.layout import (
-    compact_small_files,
-    sorted_write,
-    zorder_write,
-)
 
 __all__ = [
     "dedup_keep_first",
@@ -25,11 +17,5 @@ __all__ = [
     "find_time_gaps",
     "upsert",
     "with_wma",
-    "pagerank",
     "asof_join",
-    "connected_components",
-    "release",
-    "compact_small_files",
-    "sorted_write",
-    "zorder_write",
 ]

@@ -66,16 +66,19 @@ class Pipeline:
             start = self.warehouse.incremental_start(job.spec, now)
             if start is None:
                 start = backfill_start or (now - timedelta(days=30))
-            rows = job.fetch(self.spark, start, now)
-            rows = rows.cache()
-            n = rows.count()
-            if n:
-                self.warehouse.upsert(job.spec, rows, order_col=job.order_col)
+            rows = job.fetch(self.spark, start, now).cache()
         else:
             rows = job.fetch(self.spark, now, now).cache()
+        # the batch is cached only for the commit; a long-lived
+        # run_forever must not pin one more batch per table every tick
+        try:
             n = rows.count()
-            if n:
+            if n and job.spec.needs_incremental:
+                self.warehouse.upsert(job.spec, rows, order_col=job.order_col)
+            elif n:
                 self.warehouse.overwrite(job.spec, rows)
+        finally:
+            rows.unpersist()
         self.notify(f"updated {name}: {n} rows")
         return n
 

@@ -14,7 +14,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """Local cores (and shuffle partitions): ``$SPARK_GRAFT_CPUS`` when
+    set, else every core of the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else half of
+    the host's physical memory, so the JVM never asks for more than
+    the machine has."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
 
 
 def get_session(
@@ -25,29 +40,21 @@ def get_session(
 ) -> SparkSession:
     """Build (or return) the configured SparkSession.
 
-    Defaults target local[] testing but every knob is the one you
-    would set on a real cluster: AQE on (runtime skew-join splitting
-    and post-shuffle coalescing matter far more at 100 TB than at
-    sf0.1), UTC session timezone, Arrow transfers for pandas kernels.
+    Defaults fit the host: ``local[<cores>]``, one shuffle partition
+    per core, half the physical memory for the driver. AQE is on
+    (runtime skew-join splitting and post-shuffle coalescing), the
+    session timezone is UTC, and pandas kernels use Arrow transfers.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    # AQE stays ON by default — runtime skew-join splitting and
-    # post-shuffle coalescing are what survive 100 TB, and that is the
-    # posture this engine benchmarks under. The knob exists because
-    # the re-plan machinery costs a measured ~20% of wall on
-    # sub-second small-data queries (FLAGSHIP round-8 decomposition):
-    # an interactive deployment over small warm tables may flip it,
-    # exactly as Spark users do in practice.
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "1") != "0"
+    n_shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.adaptive.enabled", str(aqe).lower())
-        .config("spark.sql.adaptive.coalescePartitions.enabled", str(aqe).lower())
-        .config("spark.sql.adaptive.skewJoin.enabled", str(aqe).lower())
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # store tz-naive-UTC; read parquet TIMESTAMP(isAdjustedToUTC=false)
         # as TimestampType (not NTZ) so event-time ops (watermarks) work —
@@ -61,20 +68,9 @@ def get_session(
         # reads it natively.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # InferFiltersFromGenerate turns explode(f(x)) into
-        # `Filter size(f(x)) > 0` and pushes it below exchanges — for
-        # our text kernels f(x) is a tokenize+md5 transform, so the
-        # inferred filter re-evaluates the whole kernel a second time
-        # (in the narrow pre-shuffle stage, serializing it). Every
-        # generator input here is non-empty by construction
-        # (greatest(n, 1) guards), so the rule only costs.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

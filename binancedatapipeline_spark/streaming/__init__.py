@@ -1,41 +1,11 @@
 from binancedatapipeline_spark.streaming.jobs import (
     resample_klines,
-    sessionize_windows,
-    batch_token_sketch,
-    compact_corpus_hist,
-    compact_corpus_sketch,
-    read_corpus_hist,
-    read_corpus_sketch,
-    stream_curate_upsert,
-    stream_incremental_dedup,
-    stream_span_dedup,
-    compact_span_index,
-    stream_dedup,
-    stream_distinct_sketch,
-    stream_hist_sketch,
-    stream_near_dedup,
     stream_premium,
-    stream_token_sketch,
     stream_upsert,
 )
 
 __all__ = [
     "resample_klines",
-    "sessionize_windows",
-    "batch_token_sketch",
-    "compact_corpus_hist",
-    "compact_corpus_sketch",
-    "read_corpus_hist",
-    "read_corpus_sketch",
-    "stream_curate_upsert",
-    "stream_incremental_dedup",
-    "stream_span_dedup",
-    "compact_span_index",
-    "stream_dedup",
-    "stream_distinct_sketch",
-    "stream_hist_sketch",
-    "stream_near_dedup",
     "stream_premium",
-    "stream_token_sketch",
     "stream_upsert",
 ]

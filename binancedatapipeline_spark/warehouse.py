@@ -1289,44 +1289,6 @@ class Warehouse:
         self._gc_txlog()
         return self._vacuum_unreferenced(name, full=full)
 
-    def prune_orphans(
-        self,
-        spec: TableSpec,
-        live_keys: DataFrame,
-        min_orphan_frac: float = 0.1,
-    ) -> dict:
-        """Row-level GC for derived state tables (round 6): drop rows
-        whose key no longer appears in ``live_keys`` once orphans
-        exceed ``min_orphan_frac`` of the table.
-
-        The motivating consumer is the incremental-dedup band index
-        (L37/L38): its documented staleness window — ids deleted from
-        the docs table (curation drops, retention deletes) leave band
-        rows live, and future look-alikes of the deleted content are
-        suppressed against phantom state — shrinks exactly at
-        compaction. Same shape serves the semantic-dedup vector store
-        (L43) and any (state keyed by entity id) table.
-
-        The threshold makes this a MAINTENANCE op, not a per-batch
-        one: below it the scan stops at two counts (column-pruned key
-        scan + semi-join count), above it the rewrite goes through
-        the snapshot-committed :meth:`overwrite`, so concurrent
-        readers still see one consistent version. ``live_keys``
-        columns name the join key (e.g. a single ``id`` column).
-        Returns a stats dict."""
-        key_cols = list(live_keys.columns)
-        cur = self.read(spec)
-        total = cur.count()
-        if total == 0:
-            return {"total": 0, "orphans": 0, "pruned": False}
-        kept = cur.join(live_keys, on=key_cols, how="left_semi")
-        n_kept = kept.count()
-        orphans = total - n_kept
-        if orphans == 0 or orphans / total < min_orphan_frac:
-            return {"total": total, "orphans": orphans, "pruned": False}
-        self.overwrite(spec, kept)
-        return {"total": total, "orphans": orphans, "pruned": True}
-
     # ------------------------------------------------------------ write
 
     def _with_ds(self, spec: TableSpec, df: DataFrame) -> DataFrame:

@@ -44,37 +44,23 @@ def oracle(fixture_dir):
     yield con
     con.close()
 
-
 # ---------------------------------------------------------------- slow marker
 #
-# Round 12 (VERDICT item 3): the full suite (~2500-3000 s) exceeds the
-# driver's verification window, so every round shipped with
-# "tests_ok: false" and an unverifiable suite status. Tests measured
-# >= ~7.5 s on the round-12 duration sweep (together ~1600 s of the
-# ~2540 s wall) carry the `slow` marker and are deselected by default
-# (pyproject addopts: -m "not slow") — plain `pytest tests/` stays a
-# green <15-minute core. The slow set still runs every round via
+# The training-data suite's heaviest tests (each >= ~7.5 s on a
+# 4-core duration sweep) carry the `slow` marker and are deselected by
+# default (pyproject addopts: -m "not slow"), so plain `pytest tests/`
+# stays the quick market-engine gate. Run everything with
 #   python -m pytest tests/ -q -o addopts=""
-# (the end-of-round full-suite gate recorded in OPTIMIZATION_r12.md);
-# it is coverage DEFERRED to that gate, never dropped. Central list so
-# the policy lives in one place; a renamed test simply falls back into
-# the fast core until re-measured.
+# The market engine's own tests are never on this list.
 _SLOW_TESTS = {
     "tests/test_cli.py::test_fit_quality_verb_persists_loadable_classifier",
-    "tests/test_cli.py::test_rollback_verb_restores_previous_version",
-    "tests/test_cli.py::test_update_is_incremental_and_idempotent",
-    "tests/test_cli.py::test_update_populates_all_standard_tables",
-    "tests/test_cli.py::test_update_then_watermark_and_validate",
-    "tests/test_cli.py::test_vacuum_and_maintain_verbs",
     "tests/test_components.py::test_near_dedup_score_col_keeps_best_scored_member",
     "tests/test_corpus_io.py::test_psl_wildcard_and_exception_rules",
     "tests/test_dsir.py::test_dsir_select_deterministic_and_seed_sensitive",
-    "tests/test_entry_vanilla_session.py::test_all_queries_run_under_default_session_and_any_tz",
     "tests/test_incremental_dedup.py::test_incremental_near_dedup_first_writer_wins",
     "tests/test_incremental_semantic_dedup.py::test_batch_dedups_against_history_and_within",
     "tests/test_incremental_semantic_dedup.py::test_double_batch_vs_float_store_anchor_still_holds",
     "tests/test_incremental_semantic_dedup.py::test_replay_is_idempotent_via_stored_anchor",
-    "tests/test_notifications.py::test_format_alert_clip_never_slices_tags",
     "tests/test_pagerank.py::test_personalized_matches_reference_and_concentrates_on_seeds",
     "tests/test_pagerank.py::test_release_frees_result_blocks_across_many_graphs",
     "tests/test_pagerank.py::test_tolerance_early_stop_converges",
@@ -84,11 +70,9 @@ _SLOW_TESTS = {
     "tests/test_pagerank.py::test_warm_start_same_fixpoint_fewer_rounds",
     "tests/test_pagerank.py::test_warm_start_warehouse_recrawl_roundtrip",
     "tests/test_pipeline_composition_r8.py::test_warc_to_training_shards",
-    "tests/test_plans_physical.py::test_no_cartesian_products_anywhere",
     "tests/test_pq.py::test_ivfpq_encoded_requires_matching_artifacts",
     "tests/test_pq.py::test_ivfpq_recall_with_generous_probe",
     "tests/test_pq.py::test_pq_adc_recall_vs_bruteforce",
-    "tests/test_properties.py::test_upsert_replay_is_idempotent",
     "tests/test_properties_round4b.py::test_exact_selection_matches_global_sort",
     "tests/test_properties_sketch.py::test_bloom_keeps_subset_of_exact_any_corpus",
     "tests/test_properties_sketch.py::test_cms_never_undercounts_any_stream",
@@ -103,9 +87,6 @@ _SLOW_TESTS = {
     "tests/test_round5_fixes.py::test_collapsed_clusters_equal_uncollapsed",
     "tests/test_round5_fixes.py::test_incremental_collapse_equivalence",
     "tests/test_round5_fixes.py::test_replayed_twin_does_not_displace_stored_canonical",
-    "tests/test_round8_fixes.py::test_alert_txn_crash_before_commit_record_leaves_nothing",
-    "tests/test_round8_fixes.py::test_alert_txn_crash_between_member_publishes_rolls_both_forward",
-    "tests/test_round8_fixes.py::test_aqe_env_knob_configures_session",
     "tests/test_semantic_dedup.py::test_clusters_collapse_planted_groups",
     "tests/test_semantic_dedup.py::test_semantic_collapse_equivalence_and_twin_guard",
     "tests/test_semantic_dedup.py::test_survivors_are_cluster_minima",
@@ -124,22 +105,11 @@ _SLOW_TESTS = {
     "tests/test_stream_token_sketch.py::test_stream_hist_fold_equals_batch_build_and_quantiles",
     "tests/test_stream_token_sketch.py::test_stream_hist_replay_and_rebuild",
     "tests/test_stream_token_sketch.py::test_stream_hll_counts_and_full_replay_idempotence",
-    "tests/test_streaming_pipeline.py::test_alert_backlog_beyond_max_rows_drains_without_loss",
-    "tests/test_streaming_pipeline.py::test_alert_crash_between_ledger_and_notify_resends_once",
-    "tests/test_streaming_pipeline.py::test_alert_tick_reads_history_via_pruned_window",
-    "tests/test_streaming_pipeline.py::test_stream_extreme_alerts_end_to_end",
-    "tests/test_streaming_pipeline.py::test_stream_gap_monitor_matches_batch",
     "tests/test_streaming_pipeline.py::test_stream_near_dedup_suppresses_lsh_duplicates",
     "tests/test_streaming_pipeline.py::test_stream_sessionize_matches_batch",
     "tests/test_textops_cleaning.py::test_redaction_is_idempotent_and_complete",
     "tests/test_textops_pipeline.py::test_contamination_matches_bruteforce",
     "tests/test_warc_html.py::test_extract_links_and_host_graph_pagerank",
-    "tests/test_warehouse.py::test_concurrent_reader_never_sees_mixed_snapshot",
-    "tests/test_warehouse.py::test_crash_point_sweep_every_publish_boundary",
-    "tests/test_warehouse.py::test_cross_table_snapshot_isolation",
-    "tests/test_warehouse.py::test_register_views_snapshot_pinned_sql",
-    "tests/test_warehouse.py::test_rollback_restores_previous_snapshot",
-    "tests/test_warehouse_txn.py::test_txn_crash_point_sweep_all_or_nothing",
 }
 
 

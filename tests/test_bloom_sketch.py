@@ -13,7 +13,7 @@ from __future__ import annotations
 import math
 import random
 
-from binancedatapipeline_spark.textops.decontam import (
+from trainingdata_spark.textops.decontam import (
     bloom_decontaminate,
     build_bloom_bitmap,
     decontaminate,
@@ -119,7 +119,7 @@ def test_bloom_probe_plan_is_jvm_only_no_corpus_shuffle(spark):
 
 # ------------------------------------------------------------- count-min
 
-from binancedatapipeline_spark.textops.sketch import (  # noqa: E402
+from trainingdata_spark.textops.sketch import (  # noqa: E402
     cms_build,
     cms_error_bound,
     cms_estimate,
@@ -269,7 +269,7 @@ def test_bloom_bitmap_pins_n_and_rejects_bench_plus_bitmap(spark):
 
 # ---------------------------------------------------------------- HLL
 
-from binancedatapipeline_spark.textops.sketch import (  # noqa: E402
+from trainingdata_spark.textops.sketch import (  # noqa: E402
     hll_build,
     hll_estimate,
     hll_merge,
@@ -322,7 +322,7 @@ def test_cms_estimate_rejects_reserved_key_columns(spark):
 
 # ------------------------------------------------------------ histogram
 
-from binancedatapipeline_spark.textops.sketch import (  # noqa: E402
+from trainingdata_spark.textops.sketch import (  # noqa: E402
     hist_build,
     hist_merge,
     hist_quantile,
@@ -413,7 +413,7 @@ def test_hist_guards_reserved_cols_mixed_edges_and_nan(spark):
 def test_hist_quantiles_multi_q_matches_per_q(spark):
     import pyspark.sql.functions as F
 
-    from binancedatapipeline_spark.textops.sketch import hist_quantiles
+    from trainingdata_spark.textops.sketch import hist_quantiles
 
     df = spark.range(5000).select(
         (F.pmod(F.xxhash64("id"), 7)).cast("string").alias("grp"),
@@ -451,7 +451,7 @@ def test_hist_quantile_tolerates_existing_q_column(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from binancedatapipeline_spark.textops.sketch import (
+    from trainingdata_spark.textops.sketch import (
         hist_build,
         hist_quantile,
         hist_quantiles,

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from binancedatapipeline_spark.textops.bpe import (
+from trainingdata_spark.textops.bpe import (
     EOW,
     apply_bpe,
     bpe_vocab,

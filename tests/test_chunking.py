@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from binancedatapipeline_spark.textops.packing import chunk_documents
+from trainingdata_spark.textops.packing import chunk_documents
 
 
 def _ref_chunks(text: str, max_tokens: int, overlap: int):

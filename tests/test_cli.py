@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from binancedatapipeline_spark import catalog, cli
 from binancedatapipeline_spark.warehouse import Warehouse
+from trainingdata_spark import cli as suite_cli
 
 
 @pytest.fixture()
@@ -118,8 +119,8 @@ def test_fit_langid_verb_persists_loadable_model(spark, wh_root, tmp_path):
     """Round 11: the fit-langid verb fits profiles from a labeled
     corpus and persists them through the models seam; the saved model
     loads back and classifies."""
-    from binancedatapipeline_spark import models
-    from binancedatapipeline_spark.textops.langid import classify_language
+    from trainingdata_spark import models
+    from trainingdata_spark.textops.langid import classify_language
 
     corpus = str(tmp_path / "labeled")
     spark.createDataFrame(
@@ -129,7 +130,7 @@ def test_fit_langid_verb_persists_loadable_model(spark, wh_root, tmp_path):
     ).write.parquet(corpus)
     model_dir = str(tmp_path / "langid_model")
     lines = []
-    rc = cli.main(
+    rc = suite_cli.main(
         ["--warehouse", wh_root, "fit-langid", "--corpus", corpus,
          "--out", model_dir, "--top-k", "100"],
         spark=spark,
@@ -147,7 +148,7 @@ def test_fit_langid_verb_persists_loadable_model(spark, wh_root, tmp_path):
     assert got == {1: "en", 2: "es"}
     # immutable by default: a second fit without --overwrite fails
     with pytest.raises(Exception):
-        cli.main(
+        suite_cli.main(
             ["--warehouse", wh_root, "fit-langid", "--corpus", corpus,
              "--out", model_dir],
             spark=spark,
@@ -161,8 +162,8 @@ def test_fit_quality_verb_persists_loadable_classifier(spark, wh_root, tmp_path)
     classifier loads back and separates held-out docs."""
     import random
 
-    from binancedatapipeline_spark import models
-    from binancedatapipeline_spark.textops.quality_clf import score_quality
+    from trainingdata_spark import models
+    from trainingdata_spark.textops.quality_clf import score_quality
 
     rng = random.Random(7)
     good = ["science", "method", "theory", "evidence", "study", "analysis"]
@@ -178,7 +179,7 @@ def test_fit_quality_verb_persists_loadable_classifier(spark, wh_root, tmp_path)
     ).write.parquet(neg)
     model_dir = str(tmp_path / "clf_model")
     lines = []
-    rc = cli.main(
+    rc = suite_cli.main(
         ["--warehouse", wh_root, "fit-quality", "--positive", pos,
          "--negative", neg, "--out", model_dir,
          "--num-features", str(1 << 10), "--max-iter", "10"],
@@ -194,7 +195,7 @@ def test_fit_quality_verb_persists_loadable_classifier(spark, wh_root, tmp_path)
              for r in score_quality(hold, clf).collect()}
     assert probs["g"] > 0.5 > probs["b"]
     with pytest.raises(Exception):
-        cli.main(
+        suite_cli.main(
             ["--warehouse", wh_root, "fit-quality", "--positive", pos,
              "--negative", neg, "--out", model_dir],
             spark=spark, out=lines.append,
@@ -204,8 +205,8 @@ def test_fit_quality_verb_persists_loadable_classifier(spark, wh_root, tmp_path)
 def test_fit_bpe_verb_persists_ordered_merges(spark, wh_root, tmp_path):
     """Round 11: fit-bpe learns merges once and persists the ordered
     list; loading gives back the exact train_bpe result."""
-    from binancedatapipeline_spark import models
-    from binancedatapipeline_spark.textops.bpe import train_bpe
+    from trainingdata_spark import models
+    from trainingdata_spark.textops.bpe import train_bpe
 
     corpus = str(tmp_path / "bpe_corpus")
     df = spark.createDataFrame(
@@ -215,7 +216,7 @@ def test_fit_bpe_verb_persists_ordered_merges(spark, wh_root, tmp_path):
     df.write.parquet(corpus)
     model_dir = str(tmp_path / "bpe_model")
     lines = []
-    rc = cli.main(
+    rc = suite_cli.main(
         ["--warehouse", wh_root, "fit-bpe", "--corpus", corpus,
          "--out", model_dir, "--num-merges", "20"],
         spark=spark, out=lines.append,
@@ -238,13 +239,13 @@ def test_fit_register_and_model_verb_roundtrip(spark, wh_root, tmp_path):
         ["lang", "text"],
     ).write.parquet(corpus)
     lines = []
-    rc = cli.main(
+    rc = suite_cli.main(
         ["--warehouse", wh_root, "fit-langid", "--corpus", corpus,
          "--out", str(tmp_path / "m1"), "--register", "langid"],
         spark=spark, out=lines.append,
     )
     assert rc == 0 and any("registered langid v1" in l for l in lines)
-    rc = cli.main(
+    rc = suite_cli.main(
         ["--warehouse", wh_root, "fit-langid", "--corpus", corpus,
          "--out", str(tmp_path / "m2"), "--register", "langid"],
         spark=spark, out=lines.append,
@@ -252,7 +253,7 @@ def test_fit_register_and_model_verb_roundtrip(spark, wh_root, tmp_path):
     assert rc == 0 and any("registered langid v2" in l for l in lines)
 
     lines.clear()
-    rc = cli.main(
+    rc = suite_cli.main(
         ["--warehouse", wh_root, "model", "--name", "langid"],
         spark=spark, out=lines.append,
     )
@@ -260,7 +261,7 @@ def test_fit_register_and_model_verb_roundtrip(spark, wh_root, tmp_path):
     assert any("langid v2" in l and str(tmp_path / "m2") in l for l in lines)
 
     lines.clear()
-    rc = cli.main(["--warehouse", wh_root, "model"], spark=spark,
+    rc = suite_cli.main(["--warehouse", wh_root, "model"], spark=spark,
                   out=lines.append)
     assert rc == 0
     assert any("2 registration(s)" in l for l in lines)
@@ -272,7 +273,7 @@ def test_fit_ivf_verb_sampled_and_distributed(spark, wh_root, tmp_path):
     registers like every other model."""
     import numpy as np
 
-    from binancedatapipeline_spark import models
+    from trainingdata_spark import models
 
     rng = np.random.default_rng(3)
     rows = []
@@ -292,7 +293,7 @@ def test_fit_ivf_verb_sampled_and_distributed(spark, wh_root, tmp_path):
                 "--register", "ivf-main"]
         if flag:
             argv.append("--distributed")
-        rc = cli.main(argv, spark=spark, out=lines.append)
+        rc = suite_cli.main(argv, spark=spark, out=lines.append)
         assert rc == 0
         cent = models.load_ivf_centroids(spark, str(tmp_path / out_dir))
         assert cent.shape == (4, 16)

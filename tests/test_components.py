@@ -11,8 +11,8 @@ import random
 
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.operators.components import connected_components
-from binancedatapipeline_spark.textops.dedup import (
+from trainingdata_spark.operators.components import connected_components
+from trainingdata_spark.textops.dedup import (
     dedup_clusters,
     near_dedup,
     verify_pairs_jaccard,
@@ -209,7 +209,7 @@ def test_connected_components_matches_duckdb_label_propagation(spark):
 
     from pyspark.sql import functions as F
 
-    from binancedatapipeline_spark.operators.components import connected_components
+    from trainingdata_spark.operators.components import connected_components
 
     sf = "/root/testdata/sf0.001"
     d = F.col("doc_id")

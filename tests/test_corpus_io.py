@@ -51,7 +51,7 @@ def _wet_bytes() -> bytes:
 
 
 def test_read_wet_plain_and_gzip(spark, tmp_path):
-    from binancedatapipeline_spark.textops.corpus_io import read_wet
+    from trainingdata_spark.textops.corpus_io import read_wet
 
     raw = _wet_bytes()
     (tmp_path / "a.wet").write_bytes(raw)
@@ -75,8 +75,8 @@ def test_read_wet_plain_and_gzip(spark, tmp_path):
 
 
 def test_read_wet_feeds_downstream_ops(spark, tmp_path):
-    from binancedatapipeline_spark.textops.analysis import with_tokens
-    from binancedatapipeline_spark.textops.corpus_io import read_wet
+    from trainingdata_spark.textops.analysis import with_tokens
+    from trainingdata_spark.textops.corpus_io import read_wet
 
     (tmp_path / "c.wet").write_bytes(_wet_bytes())
     docs = read_wet(spark, str(tmp_path / "c.wet"))
@@ -88,7 +88,7 @@ def test_read_wet_feeds_downstream_ops(spark, tmp_path):
 def test_malformed_headers_yield_nulls_not_errors(spark, tmp_path):
     """A conversion record missing Content-Length/WARC-Date must not
     kill the scan under ANSI mode — fields go NULL, text survives."""
-    from binancedatapipeline_spark.textops.corpus_io import read_wet
+    from trainingdata_spark.textops.corpus_io import read_wet
 
     rec = (
         "WARC/1.0\r\n"
@@ -110,7 +110,7 @@ def test_missing_uri_header_is_null_not_empty(spark, tmp_path):
     """An absent WARC-Target-URI must surface as NULL, not '' — ''
     is a joinable/groupable value and made dedup_by_url collapse all
     URI-less records into one survivor (round-6 finding)."""
-    from binancedatapipeline_spark.textops.corpus_io import read_wet
+    from trainingdata_spark.textops.corpus_io import read_wet
 
     rec = (
         "WARC/1.0\r\n"
@@ -128,7 +128,7 @@ def test_url_less_records_survive_dedup_by_url(spark, tmp_path):
     """Verdict r6 #1 done-criterion: two URL-less WET records BOTH
     survive read_wet |> dedup_by_url (no-URL is missing information,
     not a shared identity)."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         dedup_by_url,
         read_wet,
     )
@@ -157,7 +157,7 @@ def test_dedup_by_url_null_and_empty_pass_through(spark):
     themselves); real duplicate URLs still do."""
     from datetime import datetime
 
-    from binancedatapipeline_spark.textops.corpus_io import dedup_by_url
+    from trainingdata_spark.textops.corpus_io import dedup_by_url
 
     rows = [
         (1, None, datetime(2024, 1, 1), "null-a"),
@@ -178,7 +178,7 @@ def test_body_containing_version_marker_round_trips(spark, tmp_path):
     """A document whose extracted text mentions 'WARC/1.0' on its own
     line (pages about web archiving) must NOT tear the record: the
     separator is CRLF-anchored and extracted WET text uses \\n."""
-    from binancedatapipeline_spark.textops.corpus_io import read_wet
+    from trainingdata_spark.textops.corpus_io import read_wet
 
     body = "about web archiving:\nWARC/1.0\nis the version line"
     rec = (
@@ -207,7 +207,7 @@ def test_psl_domain_mode(spark):
     """domain_mode='psl': registrable domain = one label + longest
     PSL suffix; unlisted TLDs fall back to the two-label rule; a host
     that IS a suffix has no registrable domain (NULL)."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         psl_table,
         with_url_parts,
     )
@@ -246,7 +246,7 @@ def test_psl_wildcard_and_exception_rules(spark):
     rules (*.ck: every 2-label suffix under .ck is public) and their
     exceptions (!www.ck: registrable despite the wildcard) — so the
     full-Mozilla-list swap-in works on the real list."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         parse_psl_text,
         with_url_parts,
     )
@@ -308,7 +308,7 @@ def test_bundled_psl_covers_jp_geographic_and_wildcard_tlds(spark):
     *.ck wildcard with its !www.ck exception, and the
     *.kawasaki.jp geographic wildcard with the !city.kawasaki.jp
     municipal exception — plus the JP prefecture second-levels."""
-    from binancedatapipeline_spark.textops.corpus_io import with_url_parts
+    from trainingdata_spark.textops.corpus_io import with_url_parts
 
     rows = [
         (1, "https://shop.example.co.uk/x"),
@@ -343,7 +343,7 @@ def test_bundled_psl_is_the_complete_mozilla_snapshot(spark):
     subset never carried resolve out of the box — including unicode
     IDN rules, 4-label US school-district rules, and wildcards the
     subset plain-ruled incorrectly (*.sch.uk)."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         _PSL_SNAPSHOT_DATE,
         psl_table,
         with_url_parts,
@@ -402,7 +402,7 @@ def test_bundled_psl_is_the_complete_mozilla_snapshot(spark):
 
 
 def test_url_parts_and_canonicalization(spark):
-    from binancedatapipeline_spark.textops.corpus_io import with_url_parts
+    from trainingdata_spark.textops.corpus_io import with_url_parts
 
     rows = [
         (1, "HTTPS://Example.COM/Path/?utm_source=x&q=1&fbclid=z#frag"),
@@ -421,7 +421,7 @@ def test_url_parts_and_canonicalization(spark):
 def test_dedup_by_url_keeps_latest_fetch(spark):
     from datetime import datetime
 
-    from binancedatapipeline_spark.textops.corpus_io import dedup_by_url
+    from trainingdata_spark.textops.corpus_io import dedup_by_url
 
     rows = [
         (1, "https://example.com/a?utm_source=x", datetime(2024, 1, 1), "old"),
@@ -438,7 +438,7 @@ def test_dedup_by_url_keeps_latest_fetch(spark):
 def test_read_wet_stream_equals_batch(spark, tmp_path):
     """The streaming reader shares the batch parse expressions — a
     file-replayed stream emits exactly the batch rows."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         read_wet,
         read_wet_stream,
     )
@@ -470,7 +470,7 @@ def test_blocklist_subdomain_and_longest_match(spark):
     """UT1-style domain blocklist: an entry blocks its own host and
     every subdomain; the longest listed entry labels the row; NULL or
     unparseable hosts never match; schema passes through unchanged."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         blocklist_filter,
         with_blocked_domain,
     )
@@ -524,7 +524,7 @@ def test_blocklist_zero_corpus_shuffle_plan(spark):
     blocklist label count. The only hash-partitioned exchanges in the
     plan belong to the tiny dim side's per-shape distinct (keys named
     __bl_hit_*) — never a corpus column."""
-    from binancedatapipeline_spark.textops.corpus_io import with_blocked_domain
+    from trainingdata_spark.textops.corpus_io import with_blocked_domain
 
     bl = spark.createDataFrame([("bad.com",), ("x.y.bad.net",)], "domain string")
     df = spark.createDataFrame([(1, "https://a.bad.com/")], "doc_id long, url string")
@@ -541,7 +541,7 @@ def test_blocklist_zero_corpus_shuffle_plan(spark):
 
 
 def test_parse_blocklist_text(spark):
-    from binancedatapipeline_spark.textops.corpus_io import parse_blocklist_text
+    from trainingdata_spark.textops.corpus_io import parse_blocklist_text
 
     text = """
 # comment
@@ -556,7 +556,7 @@ sole.net
 
 
 def test_blocklist_empty_list_blocks_nothing(spark):
-    from binancedatapipeline_spark.textops.corpus_io import blocklist_filter
+    from trainingdata_spark.textops.corpus_io import blocklist_filter
 
     bl = spark.createDataFrame([], "domain string")
     df = spark.createDataFrame([(1, "https://any.com/")], "doc_id long, url string")
@@ -568,7 +568,7 @@ def test_blocklist_category_attribution(spark):
     category of the entry that fired; a domain on several lists shows
     them comma-joined sorted; the category follows the LONGEST match
     even when a shorter entry also matches."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         parse_blocklist_text,
         with_blocked_domain,
     )
@@ -608,7 +608,7 @@ def test_blocklist_matches_python_reference_on_random_hosts(spark):
     x a 60-entry mixed-shape list (deterministic generation)."""
     import random
 
-    from binancedatapipeline_spark.textops.corpus_io import with_blocked_domain
+    from trainingdata_spark.textops.corpus_io import with_blocked_domain
 
     rng = random.Random(42)
     tlds = ["com", "net", "org", "io"]
@@ -660,7 +660,7 @@ def test_blocklist_shuffle_fallback_matches_broadcast_path(spark):
     generated rows x an 80-entry three-category mixed-shape list."""
     import random
 
-    from binancedatapipeline_spark.textops.corpus_io import with_blocked_domain
+    from trainingdata_spark.textops.corpus_io import with_blocked_domain
 
     rng = random.Random(99)
     tlds = ["com", "net", "org"]

@@ -5,11 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.cleaning import (
+from trainingdata_spark.textops.cleaning import (
     drop_frequent_lines,
     frequent_lines,
 )
-from binancedatapipeline_spark.textops.sampling import shuffle_rows
+from trainingdata_spark.textops.sampling import shuffle_rows
 
 
 BOILER = "all rights reserved - example site"
@@ -99,7 +99,7 @@ def test_shuffle_order_matches_key_sort(spark):
 
 
 def test_curate_with_frequent_line_stage(spark):
-    from binancedatapipeline_spark.textops.curate import curate, curation_flags
+    from trainingdata_spark.textops.curate import curate, curation_flags
 
     df = _docs(spark, n=30)
     flags = curation_flags(
@@ -119,7 +119,7 @@ def test_curate_with_frequent_line_stage(spark):
 
 
 def test_curate_without_stage_unchanged(spark):
-    from binancedatapipeline_spark.textops.curate import curation_flags
+    from trainingdata_spark.textops.curate import curation_flags
 
     df = _docs(spark, n=10)
     flags = curation_flags(df, min_line_words=1, gopher_overrides={"min_words": 2})

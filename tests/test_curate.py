@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.curate import (
+from trainingdata_spark.textops.curate import (
     curate,
     curation_flags,
     curation_report,
@@ -122,7 +122,7 @@ def test_blocklist_stage_in_audit_and_filter(spark):
 
 
 def test_blocklist_kwargs_carry_category_into_audit(spark):
-    from binancedatapipeline_spark.textops.corpus_io import parse_blocklist_text
+    from trainingdata_spark.textops.corpus_io import parse_blocklist_text
 
     bl = parse_blocklist_text(spark, "spam.example\n", category="adult")
     docs = _bl_corpus(spark)
@@ -172,7 +172,7 @@ def _lang_corpus(spark):
 
 
 def _lang_profiles(spark):
-    from binancedatapipeline_spark.textops.langid import train_language_profiles
+    from trainingdata_spark.textops.langid import train_language_profiles
 
     train = spark.createDataFrame(
         [
@@ -243,7 +243,7 @@ def test_language_gate_annotation_only_without_criteria(spark):
 def _quality_model(spark):
     import random
 
-    from binancedatapipeline_spark.textops.quality_clf import (
+    from trainingdata_spark.textops.quality_clf import (
         train_quality_classifier,
     )
 

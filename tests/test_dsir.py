@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops import dsir
+from trainingdata_spark.textops import dsir
 
 TARGET_VOCAB = [
     "market", "price", "volume", "asset", "trade", "index", "margin",

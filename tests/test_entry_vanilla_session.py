@@ -1,15 +1,14 @@
-"""Pin the driver-session contract: every registry query must ANALYZE
-and EXECUTE under a *default-config* SparkSession, not just under this
+"""Pin the entry contract: every registry query must ANALYZE and
+EXECUTE under a *default-config* SparkSession, not just under this
 repo's tuned session (binancedatapipeline_spark.session disables parquet
-NTZ inference; the driver's harness does not — round 3 lost 4 queries to
-exactly that drift: a vanilla session read events.ts as TIMESTAMP_NTZ
-and unix_millis() rejected it at analysis time).
+NTZ inference; a vanilla session does not — it reads events.ts as
+TIMESTAMP_NTZ, and unix_millis() rejects that at analysis time).
 
 Also pins TZ-environment independence: the same queries run in a
 subprocess with TZ=America/New_York must produce byte-identical results
 (JVM-side string fingerprints, so the comparison can't be polluted by
 Python's process-local timestamp conversion) — `_load` pins the session
-TZ to UTC, so a non-UTC driver machine must not shift NTZ casts or
+TZ to UTC, so a non-UTC machine must not shift NTZ casts or
 date_trunc buckets.
 
 Runs in subprocesses so the default sessions can't inherit anything
@@ -27,15 +26,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # queries whose results depend on timestamp semantics — fingerprinted
 # across TZ environments
 TS_SENSITIVE = [
-    # scalar_datemath retired from the registry in round 9 (rotation
-    # for doc_langid); its epoch/interval/trunc conversions stay
-    # TZ-fingerprinted through the rows below, and the retired query
-    # itself stays DuckDB-diff-tested in test_retired_queries.py
-    "sessionize",
-    "events_hourly_rollup",
+    "window_lag_extreme",
     "window_lead_gaps",
-    "join_theta",
-    "window_range_frame",
+    "wma20",
+    "asof_join",
 ]
 
 _SCRIPT = """
@@ -75,7 +69,7 @@ for name in %(ts_sensitive)r:
         rows = df.select(
             [F.col(c).cast("string").alias(c) for c in sorted(df.columns)]
         ).collect()
-        canon = sorted(tuple(r) for r in rows)
+        canon = sorted(tuple("<null>" if v is None else v for v in r) for r in rows)
         fingerprints[name] = hashlib.md5(repr(canon).encode()).hexdigest()
     except Exception as exc:  # noqa: BLE001
         failures[f"fp:{name}"] = f"{type(exc).__name__}: {exc}"[:300]
@@ -87,7 +81,6 @@ spark.stop()
 def _run(tz: str | None) -> dict:
     sf_dir = os.environ.get("SPARK_GRAFT_VANILLA_SF", "/root/testdata/sf0.001")
     env = dict(os.environ)
-    env.pop("SPARK_GRAFT_SKETCH_ONLY", None)
     if tz is not None:
         env["TZ"] = tz
     proc = subprocess.run(
@@ -137,6 +130,10 @@ def test_table_cache_evicts_dead_sessions_and_restores_nanos_conf(spark):
 
     sf = "/root/testdata/sf0.001"
     prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    app_id = spark.sparkContext.applicationId
+    # an earlier test may have memoized events already; drop it so the
+    # load below is a fresh insert (the eviction point)
+    E._TABLE_CACHE.pop((app_id, sf, "events"), None)
     E._TABLE_CACHE[("dead-app-id", sf, "orders")] = E._t(spark, sf, "orders")
     ev = E._t(spark, sf, "events")
     assert dict(ev.dtypes)["ts"] == "timestamp"
@@ -144,7 +141,6 @@ def test_table_cache_evicts_dead_sessions_and_restores_nanos_conf(spark):
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) == prior
     # the dead-session entry was evicted by the live session's insert
     assert ("dead-app-id", sf, "orders") not in E._TABLE_CACHE
-    app_id = spark.sparkContext.applicationId
     assert all(k[0] == app_id for k in E._TABLE_CACHE)
     # events still executes end-to-end with the conf restored
     assert ev.count() > 0

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.export import (
+from trainingdata_spark.textops.export import (
     read_training_shards,
     write_training_shards,
 )
@@ -275,7 +275,7 @@ def test_conditional_put_manifest_writer_protocol(spark, tmp_path):
     (writer failure leaves NO manifest), crash-after-commit
     (idempotent same-bytes replay), and a loud conflict on a
     different manifest at the same key."""
-    from binancedatapipeline_spark.textops.export import (
+    from trainingdata_spark.textops.export import (
         InMemoryConditionalStore,
         conditional_put_manifest_writer,
     )
@@ -332,7 +332,7 @@ def test_conditional_put_rerun_after_commit_is_diagnosed(spark, tmp_path):
     file lists are authoritative) — it raises the DIAGNOSED error
     pointing at read_training_shards, distinct from the plain
     different-manifest conflict."""
-    from binancedatapipeline_spark.textops.export import (
+    from trainingdata_spark.textops.export import (
         InMemoryConditionalStore,
         conditional_put_manifest_writer,
     )

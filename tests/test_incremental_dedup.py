@@ -3,7 +3,7 @@ instead of re-signing history."""
 
 from __future__ import annotations
 
-from binancedatapipeline_spark.textops.dedup import (
+from trainingdata_spark.textops.dedup import (
     band_index,
     incremental_lsh_pairs,
     incremental_near_dedup,

@@ -8,7 +8,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.similarity import (
+from trainingdata_spark.similarity import (
     incremental_semantic_dedup,
     train_ivf_centroids,
     with_ivf_cell,
@@ -152,7 +152,7 @@ def test_stream_spec_composite_pk_rejected(spark, tmp_path):
     from pyspark.sql import types as T
 
     from binancedatapipeline_spark.catalog import TableSpec
-    from binancedatapipeline_spark.streaming.jobs import stream_semantic_dedup
+    from trainingdata_spark.streaming import stream_semantic_dedup
     from binancedatapipeline_spark.warehouse import Warehouse
 
     bad = TableSpec(

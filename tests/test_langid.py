@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops import langid
+from trainingdata_spark.textops import langid
 
 _TRAIN = {
     "en": [

@@ -10,7 +10,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.operators.layout import (
+from trainingdata_spark.operators.layout import (
     compact_small_files,
     input_bytes,
     sorted_write,
@@ -148,7 +148,7 @@ def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
         .withColumn("y", (F.xxhash64("id", F.lit(1)) % 1000 + 1000) % 1000)
         .withColumn("v", F.rand(seed=3))
     )
-    from binancedatapipeline_spark.operators.layout import zorder_write
+    from trainingdata_spark.operators.layout import zorder_write
 
     zdest = str(tmp_path / "zorder")
     zorder_write(df, zdest, cols=("x", "y"), n_files=files)
@@ -186,7 +186,7 @@ def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
 def test_zorder_key_equidepth_on_skew(spark):
     """Quantile bucketing: a heavily skewed column still spreads over
     the rank range (equi-width would collapse it)."""
-    from binancedatapipeline_spark.operators.layout import zorder_key
+    from trainingdata_spark.operators.layout import zorder_key
 
     df = spark.range(0, 10_000).withColumn(
         "skew", F.when(F.col("id") % 100 == 0, F.col("id") * 1000.0).otherwise(

@@ -9,7 +9,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.lm import (
+from trainingdata_spark.textops.lm import (
     perplexity_filter,
     score_documents,
     unigram_model,
@@ -115,7 +115,7 @@ def test_scoring_plan_broadcasts_model(spark):
 
 
 def test_map_scorer_equals_groupby_scorer(spark):
-    from binancedatapipeline_spark.textops.lm import score_documents_map
+    from trainingdata_spark.textops.lm import score_documents_map
 
     docs = _docs(spark)
     m = unigram_model(docs.filter("doc_id <> 3"), vocab_size=10)

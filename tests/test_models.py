@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark import models
+from trainingdata_spark import models
 
 
 DOCS = [
@@ -31,7 +31,7 @@ def _rows(df, *cols):
 
 
 def test_language_profiles_roundtrip_and_classify_identical(spark, tmp_path):
-    from binancedatapipeline_spark.textops.langid import (
+    from trainingdata_spark.textops.langid import (
         classify_language,
         collect_profiles,
         train_language_profiles,
@@ -60,7 +60,7 @@ def test_language_profiles_roundtrip_and_classify_identical(spark, tmp_path):
 
 
 def test_bpe_merges_roundtrip_and_encode_identical(spark, tmp_path):
-    from binancedatapipeline_spark.textops.bpe import apply_bpe, train_bpe
+    from trainingdata_spark.textops.bpe import apply_bpe, train_bpe
 
     corpus = _docs(spark)
     merges = train_bpe(corpus, num_merges=30)
@@ -76,7 +76,7 @@ def test_bpe_merges_roundtrip_and_encode_identical(spark, tmp_path):
 
 
 def test_unigram_lm_roundtrip_and_score_identical(spark, tmp_path):
-    from binancedatapipeline_spark.textops.lm import score_documents, unigram_model
+    from trainingdata_spark.textops.lm import score_documents, unigram_model
 
     corpus = _docs(spark)
     fitted = unigram_model(corpus, smoothing=0.25)
@@ -92,7 +92,7 @@ def test_unigram_lm_roundtrip_and_score_identical(spark, tmp_path):
 
 
 def test_dsir_ratio_roundtrip_and_score_identical(spark, tmp_path):
-    from binancedatapipeline_spark.textops.dsir import fit_log_ratio, score_importance
+    from trainingdata_spark.textops.dsir import fit_log_ratio, score_importance
 
     corpus = _docs(spark)
     pairs, default = fit_log_ratio(
@@ -118,7 +118,7 @@ def _embeddings(spark, n=40, dim=8):
 
 
 def test_sq_params_roundtrip_and_encode_identical(spark, tmp_path):
-    from binancedatapipeline_spark.similarity import sq_encode, train_sq_params
+    from trainingdata_spark.similarity import sq_encode, train_sq_params
 
     emb = _embeddings(spark)
     fitted = train_sq_params(emb)
@@ -133,7 +133,7 @@ def test_sq_params_roundtrip_and_encode_identical(spark, tmp_path):
 
 
 def test_ivf_pq_opq_matrices_roundtrip_exact(spark, tmp_path):
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark.similarity import (
         pq_encode,
         train_ivf_centroids,
         train_opq_rotation_residual,
@@ -169,7 +169,7 @@ def test_ivf_pq_opq_matrices_roundtrip_exact(spark, tmp_path):
 
 
 def test_save_semantics_immutable_kind_checked(spark, tmp_path):
-    from binancedatapipeline_spark.textops.langid import train_language_profiles
+    from trainingdata_spark.textops.langid import train_language_profiles
 
     fitted = train_language_profiles(
         spark.createDataFrame([("en", DOCS[0][1])], ["lang", "text"]), top_k=20
@@ -198,8 +198,8 @@ def test_stream_curate_starts_from_stored_profile_table(spark, tmp_path):
     from pyspark.sql import types as T
 
     from binancedatapipeline_spark.catalog import TableSpec
-    from binancedatapipeline_spark.streaming.jobs import stream_curate_upsert
-    from binancedatapipeline_spark.textops.langid import train_language_profiles
+    from trainingdata_spark.streaming import stream_curate_upsert
+    from trainingdata_spark.textops.langid import train_language_profiles
     from binancedatapipeline_spark.warehouse import Warehouse
 
     good = " ".join(f"word{i} sentence continues naturally here" for i in range(15))
@@ -272,8 +272,8 @@ def test_model_registry_register_resolve_versions(spark, tmp_path):
     auto-increment per name, resolve returns the latest (or pinned)
     row, and the registry is an ordinary warehouse table (queryable
     history, PK replace on same version)."""
-    from binancedatapipeline_spark.catalog import MODEL_REGISTRY
-    from binancedatapipeline_spark.textops.langid import (
+    from trainingdata_spark.models import MODEL_REGISTRY
+    from trainingdata_spark.textops.langid import (
         classify_language,
         train_language_profiles,
     )
@@ -325,7 +325,7 @@ def test_model_registry_register_resolve_versions(spark, tmp_path):
 def test_load_registered_dispatches_on_kind(spark, tmp_path):
     """load_registered resolves by name then dispatches to the typed
     loader for the row's kind — one call from registry to artifact."""
-    from binancedatapipeline_spark.textops.bpe import train_bpe
+    from trainingdata_spark.textops.bpe import train_bpe
     from binancedatapipeline_spark.warehouse import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from binancedatapipeline_spark.operators.pagerank import pagerank
+from trainingdata_spark.operators.pagerank import pagerank
 
 
 def _reference(edges, iterations=20, damping=0.85):
@@ -145,7 +145,7 @@ def test_loop_storage_stays_bounded_across_iterations(spark):
     pressure on long runs)."""
     from pyspark.sql import functions as F
 
-    from binancedatapipeline_spark.operators.pagerank import (
+    from trainingdata_spark.operators.pagerank import (
         _persistent_rdd_ids,
         pagerank,
     )
@@ -178,8 +178,8 @@ def test_concurrent_checkpoints_survive_pagerank(spark):
 
     from pyspark.sql import functions as F
 
-    from binancedatapipeline_spark.operators.components import connected_components
-    from binancedatapipeline_spark.operators.pagerank import pagerank
+    from trainingdata_spark.operators.components import connected_components
+    from trainingdata_spark.operators.pagerank import pagerank
 
     edges = spark.range(6000).select(
         F.pmod(F.xxhash64("id"), 500).alias("src"),
@@ -221,7 +221,7 @@ def test_concurrent_checkpoints_survive_pagerank(spark):
     assert not errors, errors
     assert len(bystanders) >= 3, "loops finished before any overlap happened"
 
-    from binancedatapipeline_spark.operators._checkpoint import persistent_rdd_ids
+    from trainingdata_spark.operators._checkpoint import persistent_rdd_ids
 
     still = persistent_rdd_ids(spark)
     try:
@@ -244,8 +244,8 @@ def test_failure_paths_free_all_blocks(spark):
     checkpoints)."""
     from pyspark.sql import functions as F
 
-    from binancedatapipeline_spark.operators._checkpoint import persistent_rdd_ids
-    from binancedatapipeline_spark.operators.components import connected_components
+    from trainingdata_spark.operators._checkpoint import persistent_rdd_ids
+    from trainingdata_spark.operators.components import connected_components
 
     df = spark.createDataFrame(EDGES, "src string, dst string")
     before = persistent_rdd_ids(spark)
@@ -426,9 +426,9 @@ def test_release_frees_result_blocks_across_many_graphs(spark):
     (pagerank) / per fixpoint (connected_components)."""
     from pyspark.sql import functions as F
 
-    from binancedatapipeline_spark.operators import release
-    from binancedatapipeline_spark.operators._checkpoint import persistent_rdd_ids
-    from binancedatapipeline_spark.operators.components import connected_components
+    from trainingdata_spark.operators import release
+    from trainingdata_spark.operators._checkpoint import persistent_rdd_ids
+    from trainingdata_spark.operators.components import connected_components
 
     before = persistent_rdd_ids(spark)
     results = []

@@ -9,13 +9,13 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from binancedatapipeline_spark.textops.corpus_io import (
+from trainingdata_spark.textops.corpus_io import (
     parse_blocklist_text,
     warc_documents,
 )
-from binancedatapipeline_spark.textops.curate import curate
-from binancedatapipeline_spark.textops.dedup import near_dedup
-from binancedatapipeline_spark.textops.export import (
+from trainingdata_spark.textops.curate import curate
+from trainingdata_spark.textops.dedup import near_dedup
+from trainingdata_spark.textops.export import (
     read_training_shards,
     write_training_shards,
 )

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.similarity import (
+from trainingdata_spark.similarity import (
     cosine_topk,
     ivfpq_topk,
     pq_encode,
@@ -107,7 +107,7 @@ def test_pq_adc_recall_vs_bruteforce(spark):
     ]
     assert sum(recalls) / len(recalls) >= 0.3
 
-    from binancedatapipeline_spark.similarity import pq_topk_rerank
+    from trainingdata_spark.similarity import pq_topk_rerank
 
     rr = pq_topk_rerank(enc, corpus, queries, cb, k=10, shortlist_factor=4)
     rr_sets = {}
@@ -191,7 +191,7 @@ def test_pq_string_ids_preserved(spark):
 
 
 def test_ivfpq_encoded_requires_matching_artifacts(spark):
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark.similarity import (
         ivfpq_encode,
         train_ivf_centroids,
         train_pq_codebooks_residual,
@@ -216,7 +216,7 @@ def test_ivfpq_materialized_index_partition_prunes(spark, tmp_path):
     """The 100 TB claim behind ivfpq_encode: a cell-partitioned index
     on disk lets the probe scan ONLY the probed cells — pinned by the
     physical plan's partition filters, not just row counts."""
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark.similarity import (
         ivfpq_encode,
         train_ivf_centroids,
         train_pq_codebooks_residual,
@@ -247,7 +247,7 @@ def test_opq_rotation_is_orthonormal_and_lowers_distortion(spark):
     property the ADC path relies on), and OPQ's objective —
     reconstruction error of the rotated residuals — must not exceed
     the unrotated residual codebooks' error on the same sample."""
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark.similarity import (
         _encode_matrix,
         _pq_reconstruct,
         train_ivf_centroids,
@@ -287,7 +287,7 @@ def test_ivfpq_opq_end_to_end_recall(spark):
     """ivfpq_topk with rotation= must run end-to-end (encode + ADC in
     the rotated space) and keep recall at least on par with the
     unrotated residual path on the clustered corpus."""
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark.similarity import (
         train_ivf_centroids,
         train_opq_rotation_residual,
     )
@@ -325,7 +325,7 @@ def test_distributed_ivf_centroids_drop_in_and_separate_clusters(spark):
     separates planted clusters with purity 1, and is a drop-in for
     ivf_topk — recall parity with the exact baseline on planted
     near-neighbors."""
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark.similarity import (
         train_ivf_centroids_distributed,
         with_ivf_cell,
     )
@@ -359,7 +359,7 @@ def test_distributed_ivf_centroids_drop_in_and_separate_clusters(spark):
     assert len({next(iter(s)) for s in planted_to_cells.values()}) == 8
 
     # drop-in to ivf_topk: top-1 matches the exact baseline per query
-    from binancedatapipeline_spark.similarity import ivf_topk
+    from trainingdata_spark.similarity import ivf_topk
 
     queries = _queries(spark, corpus.collect(), ids=(3, 57, 130))
     got = ivf_topk(
@@ -374,8 +374,8 @@ def test_distributed_ivf_centroids_drop_in_and_separate_clusters(spark):
 def test_distributed_ivf_centroids_roundtrip_models_seam(spark, tmp_path):
     """The distributed trainer's output persists through the same
     save_ivf_centroids/load_ivf_centroids seam, bit-identical."""
-    from binancedatapipeline_spark import models
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark import models
+    from trainingdata_spark.similarity import (
         train_ivf_centroids_distributed,
     )
 

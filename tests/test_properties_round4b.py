@@ -7,8 +7,8 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from binancedatapipeline_spark.textops.packing import chunk_documents
-from binancedatapipeline_spark.textops.sampling import select_token_budget
+from trainingdata_spark.textops.packing import chunk_documents
+from trainingdata_spark.textops.sampling import select_token_budget
 
 _SETTINGS = settings(
     max_examples=10,

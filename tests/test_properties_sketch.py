@@ -15,11 +15,11 @@ from collections import Counter
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from binancedatapipeline_spark.textops.decontam import (
+from trainingdata_spark.textops.decontam import (
     bloom_decontaminate,
     decontaminate,
 )
-from binancedatapipeline_spark.textops.sketch import cms_build, cms_estimate
+from trainingdata_spark.textops.sketch import cms_build, cms_estimate
 
 _SETTINGS = settings(
     max_examples=8,
@@ -99,7 +99,7 @@ def test_bloom_keeps_subset_of_exact_any_corpus(spark, case):
 
 # ------------------------------------------------------------ histogram
 
-from binancedatapipeline_spark.textops.sketch import (  # noqa: E402
+from trainingdata_spark.textops.sketch import (  # noqa: E402
     hist_build,
     hist_merge,
     hist_quantile,

@@ -12,7 +12,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from binancedatapipeline_spark.textops import spans
+from trainingdata_spark.textops import spans
 
 _SETTINGS = settings(
     max_examples=10,

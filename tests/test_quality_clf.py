@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops import quality_clf
+from trainingdata_spark.textops import quality_clf
 
 GOOD = [
     "the", "history", "of", "science", "describes", "observation",
@@ -131,7 +131,7 @@ def test_save_is_seam_aligned_kind_checked_and_immutable(spark, model_and_eval, 
     """Round 11: the classifier rides the models.py seam — standard
     kind-checked model.json sidecar, immutable-artifact save, loud
     cross-kind load failure in BOTH directions."""
-    from binancedatapipeline_spark import models
+    from trainingdata_spark import models
 
     model, hold = model_and_eval
     path = str(tmp_path / "clf")

@@ -3,7 +3,7 @@ exactly the planted junk and emit reproducible, well-formed chunks."""
 
 from __future__ import annotations
 
-from binancedatapipeline_spark.textops.recipe import prepare_training_corpus
+from trainingdata_spark.textops.recipe import prepare_training_corpus
 
 GOOD = " ".join(
     f"sentence{i} with natural flowing words continues here" for i in range(12)
@@ -87,7 +87,7 @@ def test_recipe_with_budget_and_mixture(spark):
 
 
 def test_recipe_with_quality_span_and_dsir_stages(spark):
-    from binancedatapipeline_spark.textops.quality_clf import (
+    from trainingdata_spark.textops.quality_clf import (
         train_quality_classifier,
     )
 
@@ -166,7 +166,7 @@ def test_quality_model_double_specification_raises(spark):
     score and gate twice — refused loudly."""
     import pytest
 
-    from binancedatapipeline_spark.textops.recipe import (
+    from trainingdata_spark.textops.recipe import (
         prepare_training_corpus,
     )
 

@@ -1,6 +1,7 @@
-"""Queries rotated OUT of the 50-slot driver registry stay verified
-here, verbatim against DuckDB — retirement frees a correctness slot,
-it must never drop coverage (registry-comment contract)."""
+"""Queries outside both registries stay verified here, verbatim
+against DuckDB: the ones rotated out of the entry registry over time
+(now in retired_queries.py) and the two __spark_entry__ queries that
+bench.py still times (cohort_retention, arg_max)."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+import retired_queries as retired
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,7 +28,7 @@ def _rows(df):
 
 
 def test_retired_word_count_matches_duckdb(spark, con):
-    got = _rows(entry_mod.q_word_count(spark, SF))
+    got = _rows(retired.q_word_count(spark, SF))
     exp = sorted(
         map(
             tuple,
@@ -41,7 +43,7 @@ def test_retired_word_count_matches_duckdb(spark, con):
 
 
 def test_retired_semi_join_matches_duckdb(spark, con):
-    got = _rows(entry_mod.q_semi_join(spark, SF))
+    got = _rows(retired.q_semi_join(spark, SF))
     exp = sorted(
         map(
             tuple,
@@ -59,7 +61,7 @@ def test_retired_semi_join_matches_duckdb(spark, con):
 def test_retired_doc_rolling_fp_matches_duckdb(spark, con):
     # retired in round 8 (rotation for dsir_scores); oracle SQL kept
     # verbatim from the round-7 registry
-    got = _rows(entry_mod.q_doc_rolling_fp(spark, SF))
+    got = _rows(retired.q_doc_rolling_fp(spark, SF))
     exp = sorted(
         map(
             tuple,
@@ -85,7 +87,7 @@ def test_retired_approx_distinct_matches_duckdb(spark, con):
     # verbatim from the round-7 registry. The full checkable contract
     # runs (no SPARK_GRAFT_SKETCH_ONLY): exact counts hash-verified,
     # sketch-within-5% boolean asserted TRUE
-    got = _rows(entry_mod.q_approx_distinct(spark, SF))
+    got = _rows(retired.q_approx_distinct(spark, SF))
     exp = sorted(
         map(
             tuple,
@@ -102,7 +104,7 @@ def test_retired_approx_distinct_matches_duckdb(spark, con):
 def test_retired_doc_rep_map_matches_duckdb(spark, con):
     # retired in round 8 (rotation for hist_quantiles); oracle SQL
     # kept verbatim from the round-8 registry
-    got = _rows(entry_mod.q_doc_rep_map(spark, SF))
+    got = _rows(retired.q_doc_rep_map(spark, SF))
     exp = sorted(
         map(
             tuple,
@@ -125,7 +127,7 @@ def test_retired_scalar_datemath_matches_duckdb(spark, con):
     # stays oracle-verified through still-registered queries (interval
     # arithmetic via join_theta, date_trunc via events_hourly_rollup,
     # date difference via window_lag_extreme)
-    got = _rows(entry_mod.q_scalar_datemath(spark, SF))
+    got = _rows(retired.q_scalar_datemath(spark, SF))
     exp = sorted(
         map(
             tuple,
@@ -148,7 +150,7 @@ def test_retired_pivot_matches_duckdb(spark, con):
     # retired in round 9 (rotation for blocklist_domains); oracle SQL
     # kept verbatim from the round-8 registry. The case-when aggregate
     # machinery stays oracle-gated through conditional_agg
-    got = _rows(entry_mod.q_pivot(spark, SF))
+    got = _rows(retired.q_pivot(spark, SF))
     exp = sorted(
         map(
             tuple,
@@ -170,7 +172,7 @@ def test_retired_groupby_having_matches_duckdb(spark, con):
     # kept verbatim from the round-9 registry. The aggregate-then-
     # filter machinery stays oracle-gated through conditional_agg and
     # cte_margin_shape
-    got = _rows(entry_mod.q_groupby_having(spark, SF))
+    got = _rows(retired.q_groupby_having(spark, SF))
     exp = sorted(
         map(
             tuple,

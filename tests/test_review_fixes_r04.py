@@ -6,15 +6,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.analysis import with_tokens
-from binancedatapipeline_spark.textops.curate import curation_flags, curation_report
-from binancedatapipeline_spark.textops.lm import (
+from trainingdata_spark.textops.analysis import with_tokens
+from trainingdata_spark.textops.curate import curation_flags, curation_report
+from trainingdata_spark.textops.lm import (
     score_documents,
     score_documents_map,
     unigram_model,
 )
-from binancedatapipeline_spark.textops.packing import chunk_documents
-from binancedatapipeline_spark.textops.sampling import (
+from trainingdata_spark.textops.packing import chunk_documents
+from trainingdata_spark.textops.sampling import (
     select_token_budget,
     temperature_mixture_rates,
 )
@@ -97,7 +97,7 @@ def test_curation_report_counts_frequent_lines(spark):
 
 
 def test_release_unpersists_the_actual_boundary(spark):
-    from binancedatapipeline_spark.textops.recipe import prepare_training_corpus
+    from trainingdata_spark.textops.recipe import prepare_training_corpus
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{i}x{j} steady prose flows" for j in range(15)), str(i % 2))
@@ -120,7 +120,7 @@ def test_release_unpersists_the_actual_boundary(spark):
 
 
 def test_mixture_oversample_tolerates_none_key(spark):
-    from binancedatapipeline_spark.textops.sampling import mixture_oversample
+    from trainingdata_spark.textops.sampling import mixture_oversample
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None)], "doc_id long, domain string"
@@ -131,7 +131,7 @@ def test_mixture_oversample_tolerates_none_key(spark):
 
 
 def test_eager_inventory_matches_lazy(spark):
-    from binancedatapipeline_spark.textops.cleaning import drop_frequent_lines
+    from trainingdata_spark.textops.cleaning import drop_frequent_lines
 
     rows = [(i, f"body {i} text\nshared recurring footer line") for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -144,7 +144,7 @@ def test_eager_inventory_matches_lazy(spark):
 
 
 def test_apply_bpe_keep_eow_aligns_with_vocab(spark):
-    from binancedatapipeline_spark.textops.bpe import (
+    from trainingdata_spark.textops.bpe import (
         EOW, apply_bpe, bpe_vocab, train_bpe,
     )
 
@@ -162,7 +162,7 @@ def test_apply_bpe_keep_eow_aligns_with_vocab(spark):
 
 
 def test_score_documents_skips_repersist(spark):
-    from binancedatapipeline_spark.textops.lm import score_documents, unigram_model
+    from trainingdata_spark.textops.lm import score_documents, unigram_model
     from pyspark.storagelevel import StorageLevel
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")

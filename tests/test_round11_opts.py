@@ -18,13 +18,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.operators.percentiles import grouped_percentiles
-from binancedatapipeline_spark.textops.analysis import tokens_col
-from binancedatapipeline_spark.textops.dedup import (
+from trainingdata_spark.operators.percentiles import grouped_percentiles
+from trainingdata_spark.textops.analysis import tokens_col
+from trainingdata_spark.textops.dedup import (
     _shingle_array,
     _shingle_regex_array,
 )
-from binancedatapipeline_spark.textops.langid import char_ngrams, char_ngrams_hof
+from trainingdata_spark.textops.langid import char_ngrams, char_ngrams_hof
 
 # the adversarial corpus every kernel differential below runs over:
 # empty, NULL, whitespace-only, fewer-than-n tokens, exactly-n,
@@ -148,7 +148,7 @@ def test_percentiles_array_matches_scalar_approx(spark):
 
 
 def test_blocklist_small_list_is_local_relation(spark):
-    from binancedatapipeline_spark.textops.corpus_io import parse_blocklist_text
+    from trainingdata_spark.textops.corpus_io import parse_blocklist_text
 
     text = "\n".join(
         [
@@ -171,7 +171,7 @@ def test_blocklist_small_list_is_local_relation(spark):
 
 
 def test_blocklist_small_list_with_category(spark):
-    from binancedatapipeline_spark.textops.corpus_io import parse_blocklist_text
+    from trainingdata_spark.textops.corpus_io import parse_blocklist_text
 
     df = parse_blocklist_text(spark, "a.com\nb.org\n", category="ads")
     rows = sorted((r["domain"], r["category"]) for r in df.collect())
@@ -180,7 +180,7 @@ def test_blocklist_small_list_with_category(spark):
 
 
 def test_blocklist_empty_list(spark):
-    from binancedatapipeline_spark.textops.corpus_io import parse_blocklist_text
+    from trainingdata_spark.textops.corpus_io import parse_blocklist_text
 
     df = parse_blocklist_text(spark, "# only comments\n\n")
     assert df.count() == 0
@@ -192,7 +192,7 @@ def test_window_occurrences_match_hof_reference(spark):
     (id, pos, h) multiset of the HOF reference (_window_hash_array
     over tokens_col), including short docs (zero windows), empty and
     NULL text."""
-    from binancedatapipeline_spark.textops.spans import (
+    from trainingdata_spark.textops.spans import (
         _window_hash_array,
         _window_occurrences,
     )

@@ -98,7 +98,7 @@ def _queries(spark):
 
 
 def test_cosine_topk_arrow_matches_jvm_adversarial(spark, adversarial_corpus):
-    from binancedatapipeline_spark import similarity as sim
+    from trainingdata_spark import similarity as sim
 
     q = _queries(spark)
     got = _canon(sim.cosine_topk(adversarial_corpus, q, k=6, kernel="arrow"))
@@ -107,7 +107,7 @@ def test_cosine_topk_arrow_matches_jvm_adversarial(spark, adversarial_corpus):
 
 
 def test_cosine_topk_arrow_matches_jvm_random_float32(spark, random_corpus):
-    from binancedatapipeline_spark import similarity as sim
+    from trainingdata_spark import similarity as sim
 
     q = random_corpus.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -118,7 +118,7 @@ def test_cosine_topk_arrow_matches_jvm_random_float32(spark, random_corpus):
 
 
 def test_sq_topk_arrow_matches_jvm(spark, random_corpus):
-    from binancedatapipeline_spark import similarity as sim
+    from trainingdata_spark import similarity as sim
 
     params = sim.train_sq_params(random_corpus)
     enc = sim.sq_encode(random_corpus, params).select("vec_id", "sq_code")
@@ -131,7 +131,7 @@ def test_sq_topk_arrow_matches_jvm(spark, random_corpus):
 
 
 def test_near_dup_arrow_matches_jvm_adversarial(spark, adversarial_corpus):
-    from binancedatapipeline_spark import similarity as sim
+    from trainingdata_spark import similarity as sim
 
     got = _canon(
         sim.cosine_near_dup_pairs(
@@ -147,7 +147,7 @@ def test_near_dup_arrow_matches_jvm_adversarial(spark, adversarial_corpus):
 
 
 def test_near_dup_arrow_matches_jvm_random_float32(spark, random_corpus):
-    from binancedatapipeline_spark import similarity as sim
+    from trainingdata_spark import similarity as sim
 
     got = _canon(
         sim.cosine_near_dup_pairs(
@@ -169,7 +169,7 @@ def test_zero_norm_division_parity(spark):
     DIVIDE_BY_ZERO under ANSI (the session default) and yields NULL
     (dropped by rank/threshold semantics identically) otherwise. The
     Arrow kernels replicate both modes."""
-    from binancedatapipeline_spark import similarity as sim
+    from trainingdata_spark import similarity as sim
 
     corpus = spark.createDataFrame(
         [(1, [1.0, 2.0], 0), (2, [0.0, 0.0], 0), (3, [2.0, 1.0], 0)],
@@ -207,7 +207,7 @@ def test_zero_norm_division_parity(spark):
 
 
 def test_tfidf_broadcast_mode_matches_window_mode(spark):
-    from binancedatapipeline_spark.textops.analysis import tfidf_top_terms
+    from trainingdata_spark.textops.analysis import tfidf_top_terms
 
     docs = spark.createDataFrame(
         [
@@ -232,7 +232,7 @@ def test_token_and_quality_counts_match_split_forms(spark):
     split → size, strip → length) integer-for-integer on whitespace,
     unicode, digit and punctuation edges — including the split('')
     → [''] → 1 empty-text artifact and NULL propagation."""
-    from binancedatapipeline_spark.textops.analysis import (
+    from trainingdata_spark.textops.analysis import (
         tokens_col,
         with_quality,
         with_tokens,

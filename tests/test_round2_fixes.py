@@ -14,7 +14,7 @@ from binancedatapipeline_spark import catalog
 from binancedatapipeline_spark.catalog import TableSpec, _schema, lookback_for
 from binancedatapipeline_spark.functions.timeutils import minutes_between
 from binancedatapipeline_spark.operators.asof import asof_join
-from binancedatapipeline_spark.operators.salt import salted_join
+from trainingdata_spark.operators.salt import salted_join
 from binancedatapipeline_spark.operators.upsert import upsert
 from binancedatapipeline_spark.pipeline import Pipeline
 from binancedatapipeline_spark.warehouse import Warehouse

@@ -44,7 +44,7 @@ def test_approx_percentiles_within_rank_error(spark):
     """The sketch path (exact=False) must agree with the exact path
     well within the sketch's rank-error bound on a realistic grouped
     distribution."""
-    from binancedatapipeline_spark.operators.percentiles import grouped_percentiles
+    from trainingdata_spark.operators.percentiles import grouped_percentiles
 
     df = spark.range(0, 20_000).select(
         (F.col("id") % 4).alias("g"),
@@ -95,7 +95,7 @@ def test_wma_exact_decimal_matches_plain_double(spark):
 
 
 def test_spread_probe_memoized(spark):
-    from binancedatapipeline_spark.operators.spread import spread
+    from trainingdata_spark.operators.spread import spread
 
     df = spark.range(0, 100, 1, 2)
     spread(df)

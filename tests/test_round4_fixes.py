@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entry_mod
+import retired_queries as retired
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,12 +19,12 @@ def test_approx_distinct_sketch_only_gate(spark, monkeypatch):
     # approx_distinct left the registry in round 8 (sq8_topk rotation)
     # but the gate contract lives on the retired query function
     monkeypatch.delenv("SPARK_GRAFT_SKETCH_ONLY", raising=False)
-    full = entry_mod.q_approx_distinct(spark, SF)
+    full = retired.q_approx_distinct(spark, SF)
     assert "n_users_exact" in full.columns
     assert "approx_within_5pct" in full.columns
 
     monkeypatch.setenv("SPARK_GRAFT_SKETCH_ONLY", "1")
-    sketch = entry_mod.q_approx_distinct(spark, SF)
+    sketch = retired.q_approx_distinct(spark, SF)
     assert sketch.columns == ["event_type", "n_users_approx", "n_events"]
     plan = sketch._jdf.queryExecution().optimizedPlan().toString()
     assert "count(distinct" not in plan.lower(), plan
@@ -33,15 +33,15 @@ def test_approx_distinct_sketch_only_gate(spark, monkeypatch):
 def test_ngram_prune_emits_same_pairs_as_unpruned(spark):
     """The window prune must be output-invariant: singletons only ever
     produce self-matches, which id_a < id_b removes."""
-    from binancedatapipeline_spark.textops.dedup import ngram_jaccard_pairs
+    from trainingdata_spark.textops.dedup import ngram_jaccard_pairs
 
-    docs = entry_mod._t(spark, SF, "documents")
+    docs = retired._t(spark, SF, "documents")
     pruned = ngram_jaccard_pairs(docs, min_jaccard=0.2)
     # reference shape: same front end, no prune (inline, mirrors
     # tools/bench_ngram_prune.no_prune)
-    from binancedatapipeline_spark.textops.dedup import _hash56, _shingle_array
-    from binancedatapipeline_spark.textops.analysis import tokens_col
-    from binancedatapipeline_spark.operators.spread import spread
+    from trainingdata_spark.textops.dedup import _hash56, _shingle_array
+    from trainingdata_spark.textops.analysis import tokens_col
+    from trainingdata_spark.operators.spread import spread
 
     toks = tokens_col(F.col("text"))
     doc = spread(docs).select(F.col("doc_id"), toks.alias("__toks")).select(

@@ -9,7 +9,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.dedup import (
+from trainingdata_spark.textops.dedup import (
     _collapsed_rep_pairs,
     band_index,
     dedup_clusters,
@@ -219,7 +219,7 @@ def test_ngram_prune_modes_identical_pairs(spark):
     rows = [(i, _rand_doc(rng, vocab)) for i in range(40)]
     rows += [(100 + i, rows[i][1] + " extra") for i in range(8)]
     df = _df(spark, rows)
-    from binancedatapipeline_spark.textops.dedup import ngram_jaccard_pairs
+    from trainingdata_spark.textops.dedup import ngram_jaccard_pairs
 
     def key(d):
         return {
@@ -246,7 +246,7 @@ def test_score_documents_does_not_persist_callers_model(spark):
     """score_documents used to persist the caller's model DataFrame as
     a side effect (one leaked vocab-sized cache per standalone call);
     it must leave the caller's object untouched."""
-    from binancedatapipeline_spark.textops.lm import score_documents, unigram_model
+    from trainingdata_spark.textops.lm import score_documents, unigram_model
 
     docs = _df(spark, [(1, "a a b c"), (2, "a b b d e")])
     model = unigram_model(docs)
@@ -260,7 +260,7 @@ def test_frequent_lines_handles_backtick_column_names(spark):
     """The inventory must accept column names that need backtick
     quoting (spaces/dots) — it used to interpolate the raw name into
     an F.expr SQL string."""
-    from binancedatapipeline_spark.textops.cleaning import frequent_lines, redact_pii
+    from trainingdata_spark.textops.cleaning import frequent_lines, redact_pii
 
     rows = [(i, "shared boilerplate line\nunique line %d" % i) for i in range(10)]
     df = spark.createDataFrame(rows, ["doc_id", "doc text.col"])
@@ -280,7 +280,7 @@ def test_frequent_lines_handles_backtick_column_names(spark):
 
 
 def test_curate_cache_registry_receives_persist_handle(spark):
-    from binancedatapipeline_spark.textops.curate import curate
+    from trainingdata_spark.textops.curate import curate
 
     import random as _random
 
@@ -306,7 +306,7 @@ def test_recipe_budget_selection_skips_degenerate_low_ppl_tail(spark):
     LM scores pure repetition as maximally probable)."""
     import random as _random
 
-    from binancedatapipeline_spark.textops.recipe import prepare_training_corpus
+    from trainingdata_spark.textops.recipe import prepare_training_corpus
 
     rng = _random.Random(23)
     vocab = [f"word{i}" for i in range(80)]
@@ -364,7 +364,7 @@ def test_with_fingerprint_matches_reference_md5(spark):
     normalization, including unicode stripping and a NULL text."""
     import hashlib
 
-    from binancedatapipeline_spark.textops.analysis import with_fingerprint
+    from trainingdata_spark.textops.analysis import with_fingerprint
 
     rows = [
         (1, "Hello, World!  "),

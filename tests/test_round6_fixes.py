@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entry_mod
+import retired_queries as retired
 from binancedatapipeline_spark.notifications import _clip_escaped, format_alert
 
 
@@ -88,7 +88,7 @@ def test_registry_count_distinct_still_plans_clean(spark, testdata_dir=None):
     import os
 
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    df = entry_mod.queries()["count_distinct"](spark, sf)
+    df = retired.queries()["count_distinct"](spark, sf)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan
@@ -143,7 +143,7 @@ def test_format_alert_table_clip_stays_wellformed(spark):
 
 
 def test_stream_identity_raises_on_unreadable(tmp_path):
-    from binancedatapipeline_spark.streaming.jobs import _stream_identity
+    from trainingdata_spark.streaming import _stream_identity
 
     with pytest.raises(RuntimeError, match="refusing to fall back"):
         _stream_identity("nosuchscheme://host/chk")
@@ -152,7 +152,7 @@ def test_stream_identity_raises_on_unreadable(tmp_path):
 def test_stream_identity_reads_local_metadata(tmp_path):
     import json
 
-    from binancedatapipeline_spark.streaming.jobs import _stream_identity
+    from trainingdata_spark.streaming import _stream_identity
 
     chk = tmp_path / "chk"
     chk.mkdir()
@@ -166,7 +166,7 @@ def test_stream_identity_reads_local_metadata(tmp_path):
 def test_bpe_default_cap_is_driver_safe():
     import inspect
 
-    from binancedatapipeline_spark.textops.bpe import train_bpe
+    from trainingdata_spark.textops.bpe import train_bpe
 
     cap = inspect.signature(train_bpe).parameters["max_vocab_words"].default
     assert cap <= 1_000_000
@@ -190,7 +190,7 @@ def test_ngram_jaccard_collapsed_identical_pairs(spark):
     empty and null texts."""
     import random
 
-    from binancedatapipeline_spark.textops.dedup import ngram_jaccard_pairs
+    from trainingdata_spark.textops.dedup import ngram_jaccard_pairs
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(40)]
@@ -225,7 +225,7 @@ def test_ngram_jaccard_collapsed_twin_group_linear(spark):
     """A planted 60-member exact group must yield exactly C(60,2)
     intra pairs with jaccard 1.0 — and the rep-level join must see
     ONE member (collapse really happened)."""
-    from binancedatapipeline_spark.textops.dedup import ngram_jaccard_pairs
+    from trainingdata_spark.textops.dedup import ngram_jaccard_pairs
 
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [(i, text) for i in range(60)] + [(100 + i, f"unique doc number {i} totally different words here") for i in range(5)]

@@ -509,33 +509,3 @@ def test_symbol_bounds_prune_file_listing(spark, tmp_path):
     assert rels and all(r in m2["stats_extra"]["symbol"] for r in rels)
     one2 = wh.read_between(spec, column="symbol", since="BBBUSDT", until="BBBUSDT")
     assert one2.count() == 48
-
-
-def test_aqe_env_knob_configures_session(tmp_path):
-    """SPARK_GRAFT_AQE=0 builds a session with adaptive execution off
-    (and the sub-flags following); the default stays on. Subprocess,
-    so the shared test session can't mask the env read."""
-    import os
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from binancedatapipeline_spark.session import get_session\n"
-        "spark = get_session(app_name='aqe_knob', shuffle_partitions=4)\n"
-        "print('AQE=' + spark.conf.get('spark.sql.adaptive.enabled'))\n"
-        "print('SKEW=' + spark.conf.get('spark.sql.adaptive.skewJoin.enabled'))\n"
-        "spark.stop()\n" % repo
-    )
-    for env_val, expect in (("0", "false"), (None, "true")):
-        env = dict(os.environ)
-        env.pop("SPARK_GRAFT_AQE", None)
-        if env_val is not None:
-            env["SPARK_GRAFT_AQE"] = env_val
-        out = subprocess.run(
-            [sys.executable, "-c", script], env=env,
-            capture_output=True, text=True, timeout=300,
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-        assert f"AQE={expect}" in out.stdout and f"SKEW={expect}" in out.stdout

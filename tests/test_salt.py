@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.operators.salt import salted_agg, salted_join
+from trainingdata_spark.operators.salt import salted_agg, salted_join
 
 
 def test_salted_agg_equals_plain_agg(spark):

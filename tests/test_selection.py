@@ -7,7 +7,7 @@ import random
 
 import pytest
 
-from binancedatapipeline_spark.textops.sampling import (
+from trainingdata_spark.textops.sampling import (
     mixture_sample,
     select_token_budget,
     temperature_mixture_rates,
@@ -106,7 +106,7 @@ def test_temperature_rates(spark):
 
 
 def test_cap_per_group_quota(spark):
-    from binancedatapipeline_spark.textops.sampling import cap_per_group
+    from trainingdata_spark.textops.sampling import cap_per_group
 
     rows = (
         [(f"a{i}", "siteA", float(i)) for i in range(10)]

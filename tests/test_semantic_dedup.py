@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.similarity import (
+from trainingdata_spark.similarity import (
     semantic_dedup,
     semantic_dedup_clusters,
 )
@@ -71,7 +71,7 @@ def test_semantic_collapse_equivalence_and_twin_guard(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from binancedatapipeline_spark.similarity import (
+    from trainingdata_spark.similarity import (
         semantic_dedup,
         semantic_dedup_clusters,
     )

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops import spans
+from trainingdata_spark.textops import spans
 
 # a 12-token shared passage; tests use window=8 so it yields 5
 # overlapping windows that must merge into one maximal span

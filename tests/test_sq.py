@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark import similarity as sim
+from trainingdata_spark import similarity as sim
 
 
 @pytest.fixture(scope="module")

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from binancedatapipeline_spark.catalog import TableSpec
-from binancedatapipeline_spark.streaming.jobs import stream_curate_upsert
+from trainingdata_spark.streaming import stream_curate_upsert
 from binancedatapipeline_spark.warehouse import Warehouse
 
 DOCS_SPEC = TableSpec(
@@ -99,7 +99,7 @@ def test_stream_curate_language_gate_composes(spark, tmp_path):
     streaming sink unchanged: off-list-language documents never reach
     the warehouse, and the gate's extra columns are dropped by the
     spec alignment on upsert."""
-    from binancedatapipeline_spark.textops.langid import train_language_profiles
+    from trainingdata_spark.textops.langid import train_language_profiles
 
     base = datetime(2024, 6, 1)
     en = GOOD + " the weather of the year was ordinary in the morning house"
@@ -156,7 +156,7 @@ def test_stream_lang_profiles_materialize_once(spark, tmp_path):
     same number of UDF evaluations as one direct materialization."""
     from pyspark.sql.types import StringType
 
-    from binancedatapipeline_spark.textops.langid import (
+    from trainingdata_spark.textops.langid import (
         collect_profiles,
         train_language_profiles,
     )
@@ -223,7 +223,7 @@ def test_stream_curate_quality_gate_composes(spark, tmp_path):
     docs never reach the warehouse."""
     import random
 
-    from binancedatapipeline_spark.textops.quality_clf import (
+    from trainingdata_spark.textops.quality_clf import (
         train_quality_classifier,
     )
 

@@ -11,13 +11,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from binancedatapipeline_spark.catalog import TableSpec
-from binancedatapipeline_spark.streaming.jobs import (
+from trainingdata_spark.streaming import (
     compact_dsir_distribution,
     dsir_log_ratio_from_state,
     read_dsir_distribution,
     stream_dsir_fit,
 )
-from binancedatapipeline_spark.textops import dsir
+from trainingdata_spark.textops import dsir
 from binancedatapipeline_spark.warehouse import Warehouse
 
 DIST_SPEC = TableSpec(

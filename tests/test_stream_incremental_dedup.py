@@ -9,7 +9,7 @@ import time
 from pyspark.sql import types as T
 
 from binancedatapipeline_spark.catalog import TableSpec
-from binancedatapipeline_spark.streaming.jobs import stream_incremental_dedup
+from trainingdata_spark.streaming import stream_incremental_dedup
 from binancedatapipeline_spark.warehouse import Warehouse
 
 DOCS_SPEC = TableSpec(
@@ -123,8 +123,8 @@ def test_compact_dedup_index_closes_phantom_band_window(spark, tmp_path):
     compact_dedup_index folds the index to live ids (above a
     fragmentation threshold), after which the look-alike survives
     ingestion; below the threshold it is a two-count no-op."""
-    from binancedatapipeline_spark.streaming.jobs import compact_dedup_index
-    from binancedatapipeline_spark.textops.dedup import (
+    from trainingdata_spark.streaming import compact_dedup_index
+    from trainingdata_spark.textops.dedup import (
         band_index,
         incremental_near_dedup,
     )

@@ -10,8 +10,8 @@ import numpy as np
 from pyspark.sql import types as T
 
 from binancedatapipeline_spark.catalog import TableSpec
-from binancedatapipeline_spark.similarity import train_ivf_centroids
-from binancedatapipeline_spark.streaming.jobs import stream_semantic_dedup
+from trainingdata_spark.similarity import train_ivf_centroids
+from trainingdata_spark.streaming import stream_semantic_dedup
 from binancedatapipeline_spark.warehouse import Warehouse
 
 DIM = 16

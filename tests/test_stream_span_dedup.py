@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from binancedatapipeline_spark.catalog import TableSpec
-from binancedatapipeline_spark.streaming.jobs import stream_span_dedup
+from trainingdata_spark.streaming import stream_span_dedup
 from binancedatapipeline_spark.warehouse import Warehouse
 
 DOCS_SPEC = TableSpec(
@@ -92,8 +92,8 @@ def test_cross_batch_span_dedup_and_replay(spark, tmp_path):
 def test_compact_span_index_unsuppresses_deleted_content(spark, tmp_path):
     """Once the passage's last copy is deleted from the corpus, the
     compacted index treats a re-appearance as novel again."""
-    from binancedatapipeline_spark.streaming.jobs import compact_span_index
-    from binancedatapipeline_spark.textops.spans import (
+    from trainingdata_spark.streaming import compact_span_index
+    from trainingdata_spark.textops.spans import (
         incremental_duplicate_spans,
         span_index,
     )

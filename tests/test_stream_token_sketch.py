@@ -12,13 +12,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from binancedatapipeline_spark.catalog import TableSpec
-from binancedatapipeline_spark.streaming.jobs import (
+from trainingdata_spark.streaming import (
     batch_token_sketch,
     compact_corpus_sketch,
     read_corpus_sketch,
     stream_token_sketch,
 )
-from binancedatapipeline_spark.textops.sketch import cms_build, cms_estimate
+from trainingdata_spark.textops.sketch import cms_build, cms_estimate
 from binancedatapipeline_spark.warehouse import Warehouse
 
 SKETCH_SPEC = TableSpec(
@@ -202,8 +202,8 @@ def test_geometry_guard_refuses_mismatched_state(spark, tmp_path):
 
 # ------------------------------------------------------- HLL streaming
 
-from binancedatapipeline_spark.streaming.jobs import stream_distinct_sketch  # noqa: E402
-from binancedatapipeline_spark.textops.sketch import hll_build, hll_estimate, hll_merge  # noqa: E402
+from trainingdata_spark.streaming import stream_distinct_sketch  # noqa: E402
+from trainingdata_spark.textops.sketch import hll_build, hll_estimate, hll_merge  # noqa: E402
 
 HLL_SPEC = TableSpec(
     name="user_hll",
@@ -268,11 +268,11 @@ def test_stream_hll_counts_and_full_replay_idempotence(spark, tmp_path):
 
 # ------------------------------------------------------ histogram streaming
 
-from binancedatapipeline_spark.streaming.jobs import (  # noqa: E402
+from trainingdata_spark.streaming import (  # noqa: E402
     read_corpus_hist,
     stream_hist_sketch,
 )
-from binancedatapipeline_spark.textops.sketch import hist_build, hist_quantile  # noqa: E402
+from trainingdata_spark.textops.sketch import hist_build, hist_quantile  # noqa: E402
 
 HIST_SPEC = TableSpec(
     name="len_hist",
@@ -376,8 +376,8 @@ def test_stream_hist_replay_and_rebuild(spark, tmp_path):
     pinned here in its own right): replaying a batch's cells under
     its batch id leaves the fold unchanged, and a fresh checkpoint
     re-ingesting the same source rebuilds rather than double-counts."""
-    from binancedatapipeline_spark.streaming.jobs import _with_batch_cols
-    from binancedatapipeline_spark.textops.sketch import hist_build as _hb
+    from trainingdata_spark.streaming import _with_batch_cols
+    from trainingdata_spark.textops.sketch import hist_build as _hb
 
     stage = str(tmp_path / "in")
     _stage_chunks(spark, stage, VALS, schema="id long, v double")
@@ -429,7 +429,7 @@ def test_compact_corpus_hist_preserves_counts(spark, tmp_path):
     assert q.awaitTermination(300)
     before = {r.bin: r.cnt for r in read_corpus_hist(wh, HIST_SPEC).collect()}
 
-    from binancedatapipeline_spark.streaming.jobs import compact_corpus_hist
+    from trainingdata_spark.streaming import compact_corpus_hist
 
     compact_corpus_hist(wh, HIST_SPEC)  # stream stopped: safe
     stored = wh.read(HIST_SPEC)

@@ -5,9 +5,9 @@ UNCHANGED on a streaming DataFrame and emit exactly the batch result.
 
 from __future__ import annotations
 
-from binancedatapipeline_spark.textops.bpe import apply_bpe, train_bpe
-from binancedatapipeline_spark.textops.lm import score_documents_map, unigram_model
-from binancedatapipeline_spark.textops.packing import chunk_documents
+from trainingdata_spark.textops.bpe import apply_bpe, train_bpe
+from trainingdata_spark.textops.lm import score_documents_map, unigram_model
+from trainingdata_spark.textops.packing import chunk_documents
 
 ROWS = [
     (1, " ".join(f"tok{i % 7} common words flow here" for i in range(12))),
@@ -99,7 +99,7 @@ def test_quality_scoring_streams_identically(spark, tmp_path):
     (hash TF → dot → sigmoid), so model.transform-based scoring must
     run unchanged on a streaming DataFrame — the filter a streaming
     ingest applies per micro-batch."""
-    from binancedatapipeline_spark.textops.quality_clf import (
+    from trainingdata_spark.textops.quality_clf import (
         score_quality,
         train_quality_classifier,
     )

@@ -164,7 +164,17 @@ def test_stream_gap_monitor_matches_batch(spark, fixture_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    # the processing-time timeout keeps scheduling no-data batches, so
+    # an availableNow run of this operator never terminates on its own
+    # (nor does processAllAvailable return). The data batches come
+    # first; the first empty batch means every staged file is in.
+    try:
+        deadline = _time.monotonic() + 180
+        while not any(p["numInputRows"] == 0 for p in q.recentProgress):
+            assert _time.monotonic() < deadline, "gap stream did not drain"
+            _time.sleep(0.5)
+    finally:
+        q.stop()
     got = {
         (r["symbol"], r["gap_start"], r["gap_end"])
         for r in spark.sql("SELECT * FROM gap_alerts").collect()
@@ -263,7 +273,7 @@ def test_stream_dedup_matches_batch_distinct(spark, tmp_path):
     """File-replay stream of documents with duplicated bodies: the
     deduped stream must emit exactly one row per distinct text, even
     when copies arrive in different micro-batches."""
-    from binancedatapipeline_spark.streaming.jobs import stream_dedup
+    from trainingdata_spark.streaming import stream_dedup
 
     base = datetime(2024, 5, 1, 0, 0)
     rows = []
@@ -307,7 +317,7 @@ def test_stream_near_dedup_suppresses_lsh_duplicates(spark, tmp_path):
     emitted with every band novel. Sentinel docs beyond the horizon
     advance the watermark so the real windows close, and must not be
     emitted themselves (their windows stay open)."""
-    from binancedatapipeline_spark.streaming.jobs import stream_near_dedup
+    from trainingdata_spark.streaming import stream_near_dedup
 
     base = datetime(2024, 5, 1, 0, 0)
     # every token carries the doc index: dissimilar docs share ZERO
@@ -381,7 +391,7 @@ def test_stream_sessionize_matches_batch(spark, tmp_path):
     events. Files are staged in event-time order (the file source
     replays by modification time) and a far-future sentinel event
     advances the final watermark so every real session closes."""
-    from binancedatapipeline_spark.streaming.jobs import sessionize_windows
+    from trainingdata_spark.streaming import sessionize_windows
 
     base = datetime(2024, 5, 1, 0, 0)
     rows = []

@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.cleaning import (
+from trainingdata_spark.textops.cleaning import (
     clean_lines,
     gopher_filter,
     ngram_repetition,
@@ -166,7 +166,7 @@ def test_redaction_is_idempotent_and_complete(spark, words, pii, seed):
     second pass is a no-op (n_pii == 0, text unchanged)."""
     import random
 
-    from binancedatapipeline_spark.textops.cleaning import redact_pii
+    from trainingdata_spark.textops.cleaning import redact_pii
 
     rng = random.Random(seed)
     toks = list(words)
@@ -185,7 +185,7 @@ def test_redaction_is_idempotent_and_complete(spark, words, pii, seed):
 
 class TestRepetitionFilter:
     def test_published_thresholds(self, spark):
-        from binancedatapipeline_spark.textops.cleaning import repetition_filter
+        from trainingdata_spark.textops.cleaning import repetition_filter
 
         normal = " ".join(f"alpha{i} beta{i} gamma{i} delta{i}" for i in range(20))
         loop2 = "spam ham " * 60                      # top 2-gram ~ everything
@@ -202,7 +202,7 @@ class TestRepetitionFilter:
         assert "dup_7gram" in out[3]["rep_drop_reasons"]
 
     def test_trimmed_rule_set(self, spark):
-        from binancedatapipeline_spark.textops.cleaning import repetition_filter
+        from trainingdata_spark.textops.cleaning import repetition_filter
 
         df = spark.createDataFrame([(1, "spam ham " * 60)], "doc_id int, text string")
         out = repetition_filter(

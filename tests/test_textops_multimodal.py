@@ -10,13 +10,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.multimodal import (
+from trainingdata_spark.multimodal import (
     decode_and_featurize,
     sample_frames,
     with_content_meta,
 )
-from binancedatapipeline_spark.similarity import cosine_topk, lsh_bucketed_topk
-from binancedatapipeline_spark.textops.dedup import (
+from trainingdata_spark.similarity import cosine_topk, lsh_bucketed_topk
+from trainingdata_spark.textops.dedup import (
     exact_duplicates,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -151,7 +151,7 @@ def test_frame_sampling(spark):
 
 def test_ivf_recall_vs_bruteforce(spark):
     """IVF top-k must recover most of brute-force top-k (sf0.001)."""
-    from binancedatapipeline_spark.similarity import ivf_topk
+    from trainingdata_spark.similarity import ivf_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.limit(3).select(
@@ -170,7 +170,7 @@ def test_image_dims_from_headers(spark):
     byte-for-byte; JPEG and junk must yield NULL dims, not errors."""
     import struct
 
-    from binancedatapipeline_spark.multimodal import with_image_dims
+    from trainingdata_spark.multimodal import with_image_dims
 
     png = (
         b"\x89PNG\r\n\x1a\n"
@@ -220,7 +220,7 @@ def test_jpeg_sof_header_dims(spark):
     """JPEG dims via the bounded JVM segment walk: baseline SOF0
     behind JFIF, progressive SOF2 behind a large EXIF APP1, 0xFF fill
     padding, and failure modes (SOS before SOF, truncation) -> NULL."""
-    from binancedatapipeline_spark.multimodal import with_image_dims
+    from trainingdata_spark.multimodal import with_image_dims
 
     baseline = (
         b"\xff\xd8"
@@ -258,7 +258,7 @@ def test_jpeg_sof_header_dims(spark):
 def test_image_dims_is_pure_projection(spark):
     """No shuffle, no Python: the plan is a single Project over the
     scan."""
-    from binancedatapipeline_spark.multimodal import with_image_dims
+    from trainingdata_spark.multimodal import with_image_dims
 
     df = spark.createDataFrame([(1, b"GIF89a\x10\x00\x10\x00")],
                                "media_id long, content binary")
@@ -296,7 +296,7 @@ def _wav_bytes(channels=1, rate=16000, width=2, n_frames=16000, extra_chunk=Fals
 
 
 def test_audio_meta_from_wav_headers(spark):
-    from binancedatapipeline_spark.multimodal import with_audio_meta
+    from trainingdata_spark.multimodal import with_audio_meta
 
     rows = [
         (1, _wav_bytes(channels=2, rate=44100, width=2, n_frames=44100)),
@@ -329,7 +329,7 @@ def test_audio_meta_from_wav_headers(spark):
 
 
 def test_audio_meta_is_python_free(spark):
-    from binancedatapipeline_spark.multimodal import with_audio_meta
+    from trainingdata_spark.multimodal import with_audio_meta
 
     df = spark.createDataFrame(
         [(1, _wav_bytes())], "media_id long, content binary"
@@ -342,7 +342,7 @@ def test_audio_meta_is_python_free(spark):
 
 
 def test_sample_audio_windows(spark):
-    from binancedatapipeline_spark.multimodal import sample_audio_windows
+    from trainingdata_spark.multimodal import sample_audio_windows
 
     media = spark.createDataFrame(
         [(1, 70_000), (2, 30_000), (3, 0), (4, None)],
@@ -393,7 +393,7 @@ def test_video_meta_from_mp4_headers(spark):
     ISO-BMFF headers via the bounded JVM box walk — mvhd v0 and v1,
     moov before AND after a big mdat; garbage/truncated bytes and
     non-BMFF containers yield NULL fields, never an error."""
-    from binancedatapipeline_spark.multimodal import with_video_meta
+    from trainingdata_spark.multimodal import with_video_meta
 
     rows = [
         (1, bytearray(_mp4(0, 600, 1800, 2))),           # 3000 ms, 2 tracks
@@ -427,7 +427,7 @@ def test_video_meta_from_mp4_headers(spark):
 def test_video_meta_is_python_free(spark):
     """The box walk must stay a pure JVM projection — no BatchEvalPython /
     ArrowEvalPython, no Exchange (the with_image_dims plan contract)."""
-    from binancedatapipeline_spark.multimodal import with_video_meta
+    from trainingdata_spark.multimodal import with_video_meta
 
     df = spark.createDataFrame(
         [(1, bytearray(_mp4(0, 600, 600, 1)))], "media_id long, content binary"
@@ -438,7 +438,7 @@ def test_video_meta_is_python_free(spark):
 
 
 def test_video_meta_feeds_frame_sampling(spark):
-    from binancedatapipeline_spark.multimodal import sample_frames, with_video_meta
+    from trainingdata_spark.multimodal import sample_frames, with_video_meta
 
     df = spark.createDataFrame(
         [(1, bytearray(_mp4(0, 1000, 10_000, 1)))], "media_id long, content binary"

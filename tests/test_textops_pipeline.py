@@ -5,12 +5,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from binancedatapipeline_spark.textops.decontam import (
+from trainingdata_spark.textops.decontam import (
     contamination_hits,
     decontaminate,
 )
-from binancedatapipeline_spark.textops.packing import pack_sequences
-from binancedatapipeline_spark.textops.sampling import (
+from trainingdata_spark.textops.packing import pack_sequences
+from trainingdata_spark.textops.sampling import (
     hash_sample,
     stable_split,
 )
@@ -212,7 +212,7 @@ def test_contamination_matches_bruteforce(spark, doc_toks, bench_toks):
 
 
 def test_mixture_sample_rates_and_stability(spark):
-    from binancedatapipeline_spark.textops.sampling import mixture_sample
+    from trainingdata_spark.textops.sampling import mixture_sample
 
     rows = [(i, "web" if i % 2 == 0 else "books") for i in range(4000)]
     df = spark.createDataFrame(rows, "doc_id long, domain string")
@@ -238,7 +238,7 @@ def test_mixture_sample_rates_and_stability(spark):
 
 
 def test_mixture_oversample_repetition(spark):
-    from binancedatapipeline_spark.textops.sampling import (
+    from trainingdata_spark.textops.sampling import (
         mixture_oversample,
         mixture_sample,
     )
@@ -275,7 +275,7 @@ def test_tfidf_top_terms_matches_duckdb(spark):
     deterministic (-tfidf, term) tie order."""
     import duckdb
 
-    from binancedatapipeline_spark.textops.analysis import tfidf_top_terms
+    from trainingdata_spark.textops.analysis import tfidf_top_terms
 
     rows = [
         (1, "the cat sat on the mat"),
@@ -333,7 +333,7 @@ def test_tfidf_single_pass_plan(spark):
     ReusedExchange and a single Generate (the sum(when) pruning
     barrier in analysis.py is what keeps the two branches'
     exchanges canonically equal)."""
-    from binancedatapipeline_spark.textops.analysis import tfidf_top_terms
+    from trainingdata_spark.textops.analysis import tfidf_top_terms
 
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "a d")], "doc_id int, text string"
@@ -365,7 +365,7 @@ def test_mixture_sample_matches_independent_reference(spark):
     import hashlib
     import random
 
-    from binancedatapipeline_spark.textops.sampling import mixture_sample
+    from trainingdata_spark.textops.sampling import mixture_sample
 
     rng = random.Random(17)
     domains = [f"d{i}" for i in range(6)]

@@ -136,7 +136,7 @@ def _ref_words(html: str) -> list[str]:
 
 
 def test_read_warc_plain_and_gzip(spark, tmp_path):
-    from binancedatapipeline_spark.textops.corpus_io import read_warc
+    from trainingdata_spark.textops.corpus_io import read_warc
 
     raw = _warc_bytes()
     (tmp_path / "a.warc").write_bytes(raw)
@@ -172,7 +172,7 @@ def test_read_warc_plain_and_gzip(spark, tmp_path):
 
 
 def test_warc_documents_extracts_html_text(spark, tmp_path):
-    from binancedatapipeline_spark.textops.corpus_io import warc_documents
+    from trainingdata_spark.textops.corpus_io import warc_documents
 
     (tmp_path / "a.warc").write_bytes(_warc_bytes())
     rows = {
@@ -199,7 +199,7 @@ def test_warc_documents_extracts_html_text(spark, tmp_path):
 
 
 def test_html_to_text_words_match_stdlib_parser(spark):
-    from binancedatapipeline_spark.textops.corpus_io import html_to_text
+    from trainingdata_spark.textops.corpus_io import html_to_text
 
     docs = [
         _HTML_A,
@@ -222,7 +222,7 @@ def test_html_to_text_words_match_stdlib_parser(spark):
 def test_warc_pipeline_is_python_free_projection(spark, tmp_path):
     """Parse + extraction must stay a pure JVM scan-projection: no
     Python eval, no Exchange — the 100 TB contract for a source."""
-    from binancedatapipeline_spark.textops.corpus_io import warc_documents
+    from trainingdata_spark.textops.corpus_io import warc_documents
 
     (tmp_path / "a.warc").write_bytes(_warc_bytes())
     plan = (
@@ -236,11 +236,11 @@ def test_warc_pipeline_is_python_free_projection(spark, tmp_path):
 
 
 def test_warc_feeds_downstream_and_stream_matches_batch(spark, tmp_path):
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         read_warc,
         read_warc_stream,
     )
-    from binancedatapipeline_spark.textops.analysis import with_tokens
+    from trainingdata_spark.textops.analysis import with_tokens
 
     (tmp_path / "a.warc").write_bytes(_warc_bytes())
     batch = read_warc(spark, str(tmp_path / "a.warc"))
@@ -314,7 +314,7 @@ def _encoded_warc_bytes() -> bytes:
 
 
 def test_read_warc_binary_decodes_encoded_payloads(spark, tmp_path):
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         extract_documents,
         read_warc_binary,
     )
@@ -344,7 +344,7 @@ def test_read_warc_binary_decodes_encoded_payloads(spark, tmp_path):
 
 
 def test_binary_and_text_readers_agree_on_identity_payloads(spark, tmp_path):
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         read_warc,
         read_warc_binary,
     )
@@ -370,7 +370,7 @@ def test_review_fixes_round8(spark, tmp_path):
     """The seven post-review hardenings, one fixture each."""
     import zlib
 
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         extract_documents,
         html_to_text,
         read_warc,
@@ -479,7 +479,7 @@ def test_review_fixes_round8(spark, tmp_path):
 def test_second_review_fixes_round8(spark, tmp_path):
     """nbsp-edge id agreement, identity/none canonicalization,
     commented-out unpaired script tag."""
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.textops.corpus_io import (
         extract_documents,
         html_to_text,
         read_warc,
@@ -560,8 +560,8 @@ def test_second_review_fixes_round8(spark, tmp_path):
 def test_extract_links_and_host_graph_pagerank(spark):
     """The authority pipeline end to end: href extraction from markup
     -> host-level edges -> pagerank ranks the hub highest."""
-    from binancedatapipeline_spark.operators.pagerank import pagerank
-    from binancedatapipeline_spark.textops.corpus_io import (
+    from trainingdata_spark.operators.pagerank import pagerank
+    from trainingdata_spark.textops.corpus_io import (
         extract_links,
         host_edges,
     )
