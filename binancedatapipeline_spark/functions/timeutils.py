@@ -40,6 +40,24 @@ def tz_display(col: Column | str, tz: str = "Asia/Shanghai") -> Column:
     return F.from_utc_timestamp(F.col(col) if isinstance(col, str) else col, tz)
 
 
+_INTERVAL_UNIT_MS = {
+    "s": 1_000, "m": 60_000, "h": 3_600_000, "d": 86_400_000,
+    "w": 604_800_000,
+    # a month has no fixed length: 31 days is the longest one, so a
+    # warm-up of n monthly bars never comes up short
+    "M": 31 * 86_400_000,
+}
+
+
+def interval_ms(interval: str) -> int:
+    """A Binance kline interval (``"1m"``, ``"1h"``, ``"8h"``,
+    ``"1d"``, …) → bar length in epoch milliseconds."""
+    try:
+        return int(interval[:-1]) * _INTERVAL_UNIT_MS[interval[-1]]
+    except (KeyError, ValueError, IndexError):
+        raise ValueError(f"not a kline interval: {interval!r}") from None
+
+
 def parse_duration(text: str):
     """``"60 days"`` / ``"1 day 12 hours"`` → ``datetime.timedelta``,
     or None when any unit is not timedelta-expressible (months/years

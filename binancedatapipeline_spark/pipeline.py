@@ -21,12 +21,14 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from binancedatapipeline_spark import catalog
 from binancedatapipeline_spark.catalog import TableSpec
+from binancedatapipeline_spark.functions.timeutils import interval_ms
 from binancedatapipeline_spark.plans.premium import WMA_WINDOW, premium_wma
 from binancedatapipeline_spark.plans.validate import validate_klines
-from binancedatapipeline_spark.warehouse import Warehouse
+from binancedatapipeline_spark.warehouse import Warehouse, content_digest
 
 FetchFn = Callable[[SparkSession, datetime, datetime], DataFrame]
 
@@ -59,27 +61,42 @@ class Pipeline:
                      backfill_start: datetime | None = None) -> int:
         """One incremental tick for one table: window = [watermark −
         lookback, now] (full backfill window when the table is
-        empty), fetch, PK-upsert. Returns rows upserted."""
+        empty), fetch, PK-upsert. Returns rows upserted — for a
+        dimension, the rows of its payload, which is rewritten only
+        when its content changed."""
         job = self.jobs[name]
         now = now or _utcnow()
         if job.spec.needs_incremental:
             start = self.warehouse.incremental_start(job.spec, now)
             if start is None:
                 start = backfill_start or (now - timedelta(days=30))
-            rows = job.fetch(self.spark, start, now).cache()
+            n = self.warehouse.upsert(
+                job.spec, job.fetch(self.spark, start, now), order_col=job.order_col
+            )
         else:
-            rows = job.fetch(self.spark, now, now).cache()
+            n = self._refresh_dim(job, now)
+        self.notify(f"updated {name}: {n} rows")
+        return n
+
+    def _refresh_dim(self, job: TableJob, now: datetime) -> int:
+        """Full refresh of a non-incremental table, skipped when the
+        payload's row count and :func:`content_digest` — one aggregate
+        — match the fingerprint the live version was committed with, so
+        an unchanged dimension is not rewritten every tick (nor after a
+        restart: the fingerprint lives in the manifest)."""
+        spec = job.spec
+        rows = spec.align(job.fetch(self.spark, now, now)).cache()
         # the batch is cached only for the commit; a long-lived
         # run_forever must not pin one more batch per table every tick
         try:
-            n = rows.count()
-            if n and job.spec.needs_incremental:
-                self.warehouse.upsert(job.spec, rows, order_col=job.order_col)
-            elif n:
-                self.warehouse.overwrite(job.spec, rows)
+            row = rows.agg(
+                F.count(F.lit(1)).alias("n"), content_digest(spec).alias("d")
+            ).first()
+            n, digest = row["n"], f"{row['n']}:{row['d']}"
+            if n and digest != self.warehouse.digest(spec):
+                self.warehouse.overwrite(spec, rows, digest=digest)
         finally:
             rows.unpersist()
-        self.notify(f"updated {name}: {n} rows")
         return n
 
     def update_all(self, now: datetime | None = None) -> dict[str, int]:
@@ -145,19 +162,23 @@ class Pipeline:
         warm-up, end]: the hourly tick's window touches a handful of
         files, not the table's history — partition pruning can't do
         this (premium_wma filters the raw timestamp, not ``ds``), and
-        premium_wma's own row filter keeps the result exact."""
-        warmup = start - timedelta(minutes=WMA_WINDOW)
+        premium_wma's own row filter keeps the result exact. The
+        warm-up is WMA_WINDOW bars of the stored klines' interval
+        (read off the window's first perp bar), so the WMA is defined
+        from ``start`` on 1h bars as on 1m bars."""
+        head = self.warehouse.read_between(
+            catalog.BN_PERP_KLINES, since=start, until=end
+        ).select("interval").first()
+        interval = head["interval"] if head is not None else "1m"
+        warmup = start - WMA_WINDOW * timedelta(milliseconds=interval_ms(interval))
         perp = self.warehouse.read_between(
             catalog.BN_PERP_KLINES, since=warmup, until=end
         )
         spot = self.warehouse.read_between(
             catalog.BN_SPOT_KLINES, since=warmup, until=end
         )
-        prem = premium_wma(perp, spot, str(start), str(end))
-        n = prem.count()
-        if n:
-            self.warehouse.upsert(catalog.BN_PREMIUM, prem, order_col=None)
-        return n
+        prem = premium_wma(perp, spot, str(start), str(end), interval=interval)
+        return self.warehouse.upsert(catalog.BN_PREMIUM, prem, order_col=None)
 
     def validate(self, table: str = "bn_spot_klines", interval_hours: int = 1) -> DataFrame:
         """The recurring gap audit (validate_data, ch:1920-1953)."""

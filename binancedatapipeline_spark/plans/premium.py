@@ -4,9 +4,11 @@ Reference: ``calculate_premium_wma``
 (crypto_data_pipeline_duckdb.py:1221-1268 /
 crypto_data_pipline_clickhouse.py:1342-1388): equi-join perp and
 spot klines on (symbol, timestamp), premium = p.close/s.close - 1,
-fetch ``window`` minutes of warm-up before ``start`` so the
-120-row WMA is defined at the range boundary, compute the WMA,
-then trim back to [start, end].
+fetch ``window`` bars of warm-up before ``start`` so the 120-row WMA
+is defined at the range boundary, compute the WMA, then trim back to
+[start, end]. The reference counts the warm-up in minutes, which is
+``window`` bars only on 1m klines; here it is counted in bars of the
+klines' ``interval``.
 
 The reference round-trips through pandas for the WMA; here the
 whole thing is ONE lazy plan: join (shuffle on symbol+timestamp —
@@ -21,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from binancedatapipeline_spark.functions.timeutils import interval_ms
 from binancedatapipeline_spark.operators.wma import with_wma
 
 WMA_WINDOW = 120
@@ -32,12 +35,18 @@ def premium_wma(
     start_time: str,
     end_time: str,
     window: int = WMA_WINDOW,
+    interval: str = "1m",
 ) -> DataFrame:
     """Columns: symbol, exchange, timestamp, close_time, premium,
-    wma{window}_premium — matching the bn_premium table schema."""
+    wma{window}_premium — matching the bn_premium table schema.
+
+    ``interval`` is the klines' bar interval (their ``interval``
+    column): the ``window`` bars before ``start_time`` warm the WMA
+    up. The default, 1m, is the reference's ``window`` minutes."""
     p = perp_klines.alias("p")
     s = spot_klines.alias("s")
-    warmup_start = F.to_timestamp(F.lit(start_time)) - F.expr(f"interval {window} minutes")
+    warmup_s = window * interval_ms(interval) // 1000
+    warmup_start = F.to_timestamp(F.lit(start_time)) - F.expr(f"interval {warmup_s} seconds")
     end = F.to_timestamp(F.lit(end_time))
 
     joined = (

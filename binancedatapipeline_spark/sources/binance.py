@@ -4,11 +4,19 @@ The reference fetches per-symbol kline/funding pages with a
 ThreadPoolExecutor of 8-10 workers and driver-side pagination
 (get_historical_klines, crypto_data_pipeline_duckdb.py:883-955;
 fetch_market_klines_threadpool, duckdb:1091-1218). Here the fan-out
-is Spark tasks: the symbol list becomes a DataFrame, repartitioned to
-the desired parallelism, and ``mapInPandas`` runs the pagination
-loop per partition — so on a cluster the fetch scales with
-executors, with a per-task token-bucket rate limiter replacing the
-reference's @sleep_and_retry/@limits decorators (duckdb:434-440).
+is Spark tasks: the symbol list is cut into balanced shares, one per
+task, and ``mapInPandas`` runs the pagination loop per share — so on
+a cluster the fetch scales with executors, with a per-task
+token-bucket rate limiter replacing the reference's
+@sleep_and_retry/@limits decorators (duckdb:434-440).
+
+The fetch-path rule: a kline or funding window that fits ONE page per
+symbol (``(end − start) / interval + 1 ≤ PAGE_ROWS`` — the hourly
+tick) runs the same paging loop on ``parallelism`` driver threads
+instead, like the reference's thread pool, and lands as one
+Arrow-backed local DataFrame: a few thousand rows do not pay a Spark
+job's scheduling floor. Multi-page windows (backfills) stay
+distributed.
 
 The transport is an injected callable (``api_factory``), with BOTH
 ends of the seam shipped: ``HttpBinanceApi`` is the production
@@ -30,11 +38,14 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from binancedatapipeline_spark.functions.timeutils import interval_ms
 
 KLINE_WIRE_COLUMNS = [
     "timestamp_ms", "open", "high", "low", "close", "volume",
@@ -89,8 +100,6 @@ class SyntheticBinanceApi:
     overlap/dedup testable.
     """
 
-    INTERVAL_MS = {"1m": 60_000, "1h": 3_600_000, "8h": 28_800_000}
-
     def __init__(self, page_limit: int = 500):
         self.page_limit = page_limit
 
@@ -106,7 +115,7 @@ class SyntheticBinanceApi:
         return 10.0 + (self._h(symbol, ts, field) % 10_000) / 100.0
 
     def klines(self, symbol: str, interval: str, start_ms: int, end_ms: int) -> list[list]:
-        step = self.INTERVAL_MS[interval]
+        step = interval_ms(interval)
         first = ((start_ms + step - 1) // step) * step
         out = []
         ts = first
@@ -123,7 +132,7 @@ class SyntheticBinanceApi:
     def klines_tail(self, symbol: str, interval: str, start_ms: int, end_ms: int) -> list[list]:
         """The NEWEST page_limit bars in [start, end] — Binance's
         behavior when paginating backward by endTime."""
-        step = self.INTERVAL_MS[interval]
+        step = interval_ms(interval)
         last = end_ms // step * step
         first_grid = ((start_ms + step - 1) // step) * step
         n_available = max(0, (last - first_grid) // step + 1)
@@ -206,7 +215,7 @@ class SyntheticBinanceApi:
         return out
 
     def funding(self, symbol: str, start_ms: int, end_ms: int) -> list[dict]:
-        step = self.INTERVAL_MS["8h"]
+        step = interval_ms("8h")
         first = ((start_ms + step - 1) // step) * step
         out = []
         ts = first
@@ -418,17 +427,99 @@ class HttpBinanceApi:
         )
 
 
+# Rows one kline or funding page holds at most: the page the fetchers
+# ask for (Binance's spot-kline and /fundingRate cap). A window that
+# fits one page per symbol is fetched on the driver (see _fan_out).
+PAGE_ROWS = 1000
+
+
+def _one_page(start_ms: int, end_ms: int, step_ms: int) -> bool:
+    """Whether ``[start, end]`` holds at most one page per symbol:
+    ``(end − start) / interval + 1`` expected bars against
+    :data:`PAGE_ROWS`."""
+    return (end_ms - start_ms) // step_ms + 1 <= PAGE_ROWS
+
+
+def _slices(symbols: list[str], n: int) -> list[list[str]]:
+    """``symbols`` cut by position into ``min(n, len(symbols))``
+    contiguous shares whose sizes differ by at most one (10 symbols
+    over 4 workers → 3/3/2/2)."""
+    n = max(1, min(n, len(symbols)))
+    q, r = divmod(len(symbols), n)
+    out, i = [], 0
+    for k in range(n):
+        j = i + q + (k < r)
+        out.append(symbols[i:j])
+        i = j
+    return out
+
+
 def _symbol_fanout(
     spark: SparkSession, symbols: list[str] | DataFrame, parallelism: int
 ) -> DataFrame:
     """Normalize a symbol list/DataFrame to a one-column ``symbol``
-    relation repartitioned to the fetch parallelism — the fan-out
-    scaffold every per-symbol fetcher shares."""
+    relation with one partition per fetch task — the fan-out scaffold
+    every per-symbol fetcher shares. A list is cut into balanced
+    shares (:func:`_slices`) carried by a ``range`` with one row per
+    task, so each task gets its share without a shuffle; a DataFrame
+    is hash-repartitioned on the symbol."""
     if isinstance(symbols, DataFrame):
         sym_df = symbols.select(F.col(symbols.columns[0]).alias("symbol"))
-    else:
-        sym_df = spark.createDataFrame([(s,) for s in symbols], "symbol string")
-    return sym_df.repartition(parallelism, "symbol")
+        return sym_df.repartition(parallelism, "symbol")
+    shares = _slices(list(symbols), parallelism)
+    by_task = F.array(
+        *[F.array(*[F.lit(s) for s in share]) for share in shares]
+    ).cast("array<array<string>>")
+    return spark.range(0, len(shares), 1, len(shares)).select(
+        F.explode(F.element_at(by_task, F.col("id").cast("int") + 1)).alias("symbol")
+    )
+
+
+FetchSymbol = Callable[[object, "TokenBucket | None", str], Iterator[pd.DataFrame]]
+
+
+def _fan_out(
+    spark: SparkSession,
+    symbols: list[str] | DataFrame,
+    schema: T.StructType,
+    fetch_symbol: FetchSymbol,
+    api_factory: Callable[[], object],
+    parallelism: int,
+    rate_limit: tuple[int, float] | None,
+    on_driver: bool = False,
+) -> DataFrame:
+    """Run ``fetch_symbol(api, bucket, symbol)`` over every symbol and
+    return the pages it yields as one relation of ``schema``. Each
+    worker pages its share of the symbols with its own
+    ``api_factory()`` transport and :class:`TokenBucket`.
+
+    The workers are Spark tasks (``mapInPandas``), unless
+    ``on_driver`` is set and ``symbols`` is a list: then they are
+    ``parallelism`` driver threads, and their pages become one
+    Arrow-backed local DataFrame in ``schema``'s column order. A
+    one-page window (the hourly tick) is a few thousand rows, which
+    the driver lands faster than a Spark job can be scheduled."""
+
+    def share(symbol_iter) -> Iterator[pd.DataFrame]:
+        api = api_factory()
+        bucket = TokenBucket(*rate_limit) if rate_limit else None
+        for symbol in symbol_iter:
+            yield from fetch_symbol(api, bucket, symbol)
+
+    if on_driver and not isinstance(symbols, DataFrame):
+        shares = _slices(list(symbols), parallelism)
+        with ThreadPoolExecutor(len(shares)) as pool:
+            parts = list(pool.map(lambda s: list(share(s)), shares))
+        names = schema.fieldNames()
+        frames = [f for part in parts for f in part]
+        pdf = (pd.concat(frames, ignore_index=True)[names] if frames
+               else pd.DataFrame({n: [] for n in names}))
+        return spark.createDataFrame(pdf, schema)
+
+    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return share(s for pdf in batches for s in pdf["symbol"])
+
+    return _symbol_fanout(spark, symbols, parallelism).mapInPandas(fetch, schema)
 
 
 def _paginate_klines(api, symbol: str, interval: str, start_ms: int, end_ms: int,
@@ -456,24 +547,24 @@ def fetch_klines_distributed(
     parallelism: int = 8,
     rate_limit: tuple[int, float] | None = None,
 ) -> DataFrame:
-    """Symbol fan-out as Spark tasks → wire-format rows.
+    """Symbol fan-out → wire-format rows: Spark tasks, or driver
+    threads when the window fits one page per symbol (:func:`_fan_out`).
 
     Returns the raw wire relation (strings/epoch-ms); feed through
     ``parse_kline_records`` for the typed kline table.
     """
-    sym_df = _symbol_fanout(spark, symbols, parallelism)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        api = api_factory()
-        bucket = TokenBucket(*rate_limit) if rate_limit else None
-        for pdf in batches:
-            for symbol in pdf["symbol"]:
-                for page in _paginate_klines(api, symbol, interval, start_ms, end_ms, bucket):
-                    wire = pd.DataFrame(page, columns=KLINE_WIRE_COLUMNS)
-                    wire.insert(0, "symbol", symbol)
-                    yield wire
+    def fetch_symbol(api, bucket, symbol: str) -> Iterator[pd.DataFrame]:
+        for page in _paginate_klines(api, symbol, interval, start_ms, end_ms, bucket):
+            wire = pd.DataFrame(page, columns=KLINE_WIRE_COLUMNS)
+            wire.insert(0, "symbol", symbol)
+            yield wire
 
-    return sym_df.mapInPandas(fetch, KLINE_WIRE_SCHEMA)
+    return _fan_out(
+        spark, symbols, KLINE_WIRE_SCHEMA, fetch_symbol, api_factory,
+        parallelism, rate_limit,
+        on_driver=_one_page(start_ms, end_ms, interval_ms(interval)),
+    )
 
 
 def parse_kline_records(wire: DataFrame, kind: str, interval: str) -> DataFrame:
@@ -516,30 +607,31 @@ def fetch_funding_rates_distributed(
 
     markPrice '' → NULL → 0.0 (pd.to_numeric(errors='coerce') +
     fillna(0), crypto_data_pipline_clickhouse.py:913-920) expressed
-    as cast-to-double (bad string → NULL) + coalesce."""
-    sym_df = _symbol_fanout(spark, symbols, parallelism)
+    as cast-to-double (bad string → NULL) + coalesce. A window of at
+    most one page of 8-hourly records per symbol is fetched on the
+    driver (:func:`_fan_out`)."""
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        api = api_factory()
-        bucket = TokenBucket(*rate_limit) if rate_limit else None
-        for pdf in batches:
-            for symbol in pdf["symbol"]:
-                cur = start_ms
-                while cur <= end_ms:
-                    if bucket:
-                        bucket.acquire()
-                    page = api.funding(symbol, cur, end_ms)
-                    if not page:
-                        break
-                    yield pd.DataFrame({
-                        "symbol": symbol,
-                        "fundingTime_ms": [r["fundingTime"] for r in page],
-                        "fundingRate": [r["fundingRate"] for r in page],
-                        "markPrice": [r["markPrice"] for r in page],
-                    })
-                    cur = page[-1]["fundingTime"] + 1
+    def fetch_symbol(api, bucket, symbol: str) -> Iterator[pd.DataFrame]:
+        cur = start_ms
+        while cur <= end_ms:
+            if bucket:
+                bucket.acquire()
+            page = api.funding(symbol, cur, end_ms)
+            if not page:
+                break
+            yield pd.DataFrame({
+                "symbol": symbol,
+                "fundingTime_ms": [r["fundingTime"] for r in page],
+                "fundingRate": [r["fundingRate"] for r in page],
+                "markPrice": [r["markPrice"] for r in page],
+            })
+            cur = page[-1]["fundingTime"] + 1
 
-    wire = sym_df.mapInPandas(fetch, FUNDING_WIRE_SCHEMA)
+    wire = _fan_out(
+        spark, symbols, FUNDING_WIRE_SCHEMA, fetch_symbol, api_factory,
+        parallelism, rate_limit,
+        on_driver=_one_page(start_ms, end_ms, interval_ms("8h")),
+    )
     return wire.select(
         "symbol",
         F.lit("binance").alias("exchange"),
@@ -580,23 +672,19 @@ def fetch_klines_backward_distributed(
 ) -> DataFrame:
     """Backward-paginating variant (options path). Wire output also
     carries __page_seq so keep-first dedup is deterministic."""
-    sym_df = _symbol_fanout(spark, symbols, parallelism)
     schema = T.StructType(KLINE_WIRE_SCHEMA.fields + [T.StructField("__page_seq", T.LongType())])
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        api = api_factory()
-        bucket = TokenBucket(*rate_limit) if rate_limit else None
-        for pdf in batches:
-            for symbol in pdf["symbol"]:
-                for seq, page in enumerate(
-                    _paginate_klines_backward(api, symbol, interval, start_ms, end_ms, bucket)
-                ):
-                    wire = pd.DataFrame(page, columns=KLINE_WIRE_COLUMNS)
-                    wire.insert(0, "symbol", symbol)
-                    wire["__page_seq"] = seq
-                    yield wire
+    def fetch_symbol(api, bucket, symbol: str) -> Iterator[pd.DataFrame]:
+        for seq, page in enumerate(
+            _paginate_klines_backward(api, symbol, interval, start_ms, end_ms, bucket)
+        ):
+            wire = pd.DataFrame(page, columns=KLINE_WIRE_COLUMNS)
+            wire.insert(0, "symbol", symbol)
+            wire["__page_seq"] = seq
+            yield wire
 
-    return sym_df.mapInPandas(fetch, schema)
+    return _fan_out(spark, symbols, schema, fetch_symbol, api_factory,
+                    parallelism, rate_limit)
 
 
 def stride_windows(start_ms: int, end_ms: int, stride_days: int = 30) -> list[tuple[int, int]]:
@@ -736,24 +824,19 @@ def fetch_depth_distributed(
     """Order-book snapshot fan-out → typed ladder rows
     (symbol, ts, update_id, side, level, price, qty) — the nested
     bids/asks arrays flattened to one row per level, best level = 0."""
-    sym_df = _symbol_fanout(spark, symbols, parallelism)
+    def fetch_symbol(api, bucket, symbol: str) -> Iterator[pd.DataFrame]:
+        if bucket:
+            bucket.acquire()
+        snap = api.depth(symbol, limit)
+        rows = [
+            (symbol, snap["T"], snap["u"], side, lvl, px, qty)
+            for side, ladder in (("bid", snap["bids"]), ("ask", snap["asks"]))
+            for lvl, (px, qty) in enumerate(ladder)
+        ]
+        yield pd.DataFrame(rows, columns=[f.name for f in DEPTH_WIRE_SCHEMA.fields])
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        api = api_factory()
-        bucket = TokenBucket(*rate_limit) if rate_limit else None
-        for pdf in batches:
-            for symbol in pdf["symbol"]:
-                if bucket:
-                    bucket.acquire()
-                snap = api.depth(symbol, limit)
-                rows = [
-                    (symbol, snap["T"], snap["u"], side, lvl, px, qty)
-                    for side, ladder in (("bid", snap["bids"]), ("ask", snap["asks"]))
-                    for lvl, (px, qty) in enumerate(ladder)
-                ]
-                yield pd.DataFrame(rows, columns=[f.name for f in DEPTH_WIRE_SCHEMA.fields])
-
-    wire = sym_df.mapInPandas(fetch, DEPTH_WIRE_SCHEMA)
+    wire = _fan_out(spark, symbols, DEPTH_WIRE_SCHEMA, fetch_symbol, api_factory,
+                    parallelism, rate_limit)
     return wire.select(
         "symbol",
         F.lit("binance").alias("exchange"),
@@ -784,25 +867,17 @@ def fetch_mark_price_distributed(
     rate_limit: tuple[int, float] | None = None,
 ) -> DataFrame:
     """Mark price + greeks per option symbol, typed doubles."""
-    sym_df = _symbol_fanout(spark, symbols, parallelism)
+    def fetch_symbol(api, bucket, symbol: str) -> Iterator[pd.DataFrame]:
+        if bucket:
+            bucket.acquire()
+        recs = api.mark_price(symbol)
+        yield pd.DataFrame(
+            [[r["symbol"]] + [r.get(f) for f in MARK_WIRE_FIELDS] for r in recs],
+            columns=["symbol"] + MARK_WIRE_FIELDS,
+        )
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        api = api_factory()
-        bucket = TokenBucket(*rate_limit) if rate_limit else None
-        for pdf in batches:
-            for symbol in pdf["symbol"]:
-                if bucket:
-                    bucket.acquire()
-                recs = api.mark_price(symbol)
-                yield pd.DataFrame(
-                    [
-                        [r["symbol"]] + [r.get(f) for f in MARK_WIRE_FIELDS]
-                        for r in recs
-                    ],
-                    columns=["symbol"] + MARK_WIRE_FIELDS,
-                )
-
-    wire = sym_df.mapInPandas(fetch, MARK_WIRE_SCHEMA)
+    wire = _fan_out(spark, symbols, MARK_WIRE_SCHEMA, fetch_symbol, api_factory,
+                    parallelism, rate_limit)
     return wire.select(
         "symbol",
         F.lit("binance").alias("exchange"),
@@ -892,36 +967,31 @@ def fetch_historical_trades_distributed(
     """Historical trades with fromId cursoring (the T7 partition-local
     cursor pattern, same as kline pagination): each task walks its
     symbol's tape page by page until a short page."""
-    sym_df = _symbol_fanout(spark, symbols, parallelism)
+    def fetch_symbol(api, bucket, symbol: str) -> Iterator[pd.DataFrame]:
+        cursor: int | None = None
+        while True:
+            if bucket:
+                bucket.acquire()
+            page = api.historical_trades(symbol, page_limit, cursor)
+            if not page:
+                break
+            yield pd.DataFrame({
+                "symbol": symbol,
+                "trade_id": [r["id"] for r in page],
+                "price": [r["price"] for r in page],
+                "qty": [r["qty"] for r in page],
+                "quoteQty": [r["quoteQty"] for r in page],
+                "time_ms": [r["time"] for r in page],
+                "side": [r["side"] for r in page],
+            })
+            # terminate ONLY on an empty page: a page shorter than the
+            # REQUESTED limit may just mean the server clamped it (the
+            # endpoint caps at 500), and treating that as end-of-tape
+            # silently truncates
+            cursor = page[-1]["id"] + 1
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        api = api_factory()
-        bucket = TokenBucket(*rate_limit) if rate_limit else None
-        for pdf in batches:
-            for symbol in pdf["symbol"]:
-                cursor: int | None = None
-                while True:
-                    if bucket:
-                        bucket.acquire()
-                    page = api.historical_trades(symbol, page_limit, cursor)
-                    if not page:
-                        break
-                    yield pd.DataFrame({
-                        "symbol": symbol,
-                        "trade_id": [r["id"] for r in page],
-                        "price": [r["price"] for r in page],
-                        "qty": [r["qty"] for r in page],
-                        "quoteQty": [r["quoteQty"] for r in page],
-                        "time_ms": [r["time"] for r in page],
-                        "side": [r["side"] for r in page],
-                    })
-                    # terminate ONLY on an empty page: a page shorter
-                    # than the REQUESTED limit may just mean the server
-                    # clamped it (the endpoint caps at 500), and
-                    # treating that as end-of-tape silently truncates
-                    cursor = page[-1]["id"] + 1
-
-    wire = sym_df.mapInPandas(fetch, TRADES_WIRE_SCHEMA)
+    wire = _fan_out(spark, symbols, TRADES_WIRE_SCHEMA, fetch_symbol, api_factory,
+                    parallelism, rate_limit)
     return wire.select(
         "symbol",
         F.lit("binance").alias("exchange"),

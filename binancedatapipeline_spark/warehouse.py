@@ -81,7 +81,7 @@ import uuid
 from contextlib import ExitStack, contextmanager
 from datetime import date, datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipeline_spark.catalog import TableSpec
@@ -887,6 +887,7 @@ class Warehouse:
         fence: int | None,
         stats_column: str | None = None,
         extra_stats: tuple[str, ...] = (),
+        digest: str | None = None,
     ) -> None:
         """Build the next manifest, commit the plan, publish.
 
@@ -904,7 +905,11 @@ class Warehouse:
         ``extra_stats`` (the spec's ``stats_columns``) records the
         same per-file bounds for additional columns under
         ``stats_extra`` — value-bounded reads
-        (:meth:`read_between` with ``column=``) prune on them."""
+        (:meth:`read_between` with ``column=``) prune on them.
+
+        ``digest`` (a whole-table replace's :func:`content_digest`) is
+        recorded as the version's content fingerprint; every other
+        commit leaves the new version without one."""
         self._check_fence(name, fence)
         prev = self._current_manifest(name) if self.exists(name) else None
         if replaced_ds is None:
@@ -921,6 +926,8 @@ class Warehouse:
             "fence": fence if fence is not None else (prev or {}).get("fence", 0),
             "files": files,
         }
+        if digest is not None:
+            manifest["digest"] = digest
         if stats_column is not None or extra_stats:
             live = {rel for rels in files.values() for rel in rels}
             wanted = tuple(
@@ -1319,11 +1326,16 @@ class Warehouse:
         if not self.exists(spec.name):
             self.overwrite(spec, spec.empty(self.spark))
 
-    def overwrite(self, spec: TableSpec, df: DataFrame) -> None:
+    def overwrite(
+        self, spec: TableSpec, df: DataFrame, digest: str | None = None
+    ) -> None:
         """Full refresh (dimension tables, needs_incremental=False).
         Staged, then committed as ONE manifest replace — a reader mid-
         refresh sees the complete old snapshot or the complete new
-        one, never Spark's delete-then-write window."""
+        one, never Spark's delete-then-write window. ``digest`` is the
+        payload's :func:`content_digest`, recorded in the manifest so
+        a later refresh with the same content can skip the rewrite
+        (see :meth:`digest`)."""
         with self._writer_lock(spec.name) as fence:
             self.recover(spec.name)
             out = self._with_ds(spec, spec.align(df))
@@ -1336,7 +1348,15 @@ class Warehouse:
             moves, staged = self._staged_moves(spec.name, stage)
             self._commit(spec.name, stage, staged, moves, None, fence,
                          stats_column=spec.time_column,
-                         extra_stats=spec.stats_columns)
+                         extra_stats=spec.stats_columns, digest=digest)
+
+    def digest(self, spec: TableSpec) -> str | None:
+        """The content fingerprint the current version was committed
+        with (:meth:`overwrite`'s ``digest``), or None — read from the
+        manifest, zero Spark jobs. Any later upsert, compaction or
+        migration commits without one."""
+        manifest = self._load_manifest(spec.name)
+        return None if manifest is None else manifest.get("digest")
 
     def write_bucketed(
         self,
@@ -1366,24 +1386,26 @@ class Warehouse:
         )
         return table
 
-    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> None:
+    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> int:
         """PK-upsert restricted to the date partitions the batch
         touches. Replay-idempotent (T3/T4); crash-atomic and
         snapshot-visible via the stage-plan-manifest protocol (module
-        docstring).
+        docstring). Returns the rows upserted (the deduplicated batch);
+        an empty batch commits nothing.
 
-        Plan: dedup batch keep-last → read ONLY affected partitions
-        of the target (manifest-pruned file list) → anti-join out
-        superseded rows → union → stage the rewritten partitions →
-        publish by immutable file moves + one manifest replace (plus
-        explicit drops for touched partitions whose every row moved
-        elsewhere)."""
+        Plan: dedup batch keep-last, persisted once → ONE aggregate for
+        its row count and touched ``ds`` set → read ONLY affected
+        partitions of the target (manifest-pruned file list) →
+        anti-join out superseded rows → union → stage the rewritten
+        partitions → publish by immutable file moves + one manifest
+        replace (plus explicit drops for touched partitions whose every
+        row moved elsewhere)."""
         with self._writer_lock(spec.name) as fence:
-            self._upsert_locked(spec, updates, order_col, fence)
+            return self._upsert_locked(spec, updates, order_col, fence)
 
     def _upsert_locked(
         self, spec: TableSpec, updates: DataFrame, order_col: str | None, fence: int
-    ) -> None:
+    ) -> int:
         self.recover(spec.name)
         # dedup before align: the ordering column may be auxiliary
         # (e.g. a batch sequence number) and not part of the schema
@@ -1391,22 +1413,39 @@ class Warehouse:
             updates = dedup_keep_last(updates, spec.primary_keys, order_col)
         else:
             updates = updates.dropDuplicates(list(spec.primary_keys))
-        updates = spec.align(updates)
+        # the count, the touched partitions, the broadcast keys and the
+        # write all read this one persisted batch: the fetch and the
+        # dedup shuffle run once, not once per consumer
+        batch = self._with_ds(spec, spec.align(updates)).persist()
+        try:
+            return self._upsert_batch(spec, batch, fence)
+        finally:
+            batch.unpersist()
 
+    def _upsert_batch(self, spec: TableSpec, batch: DataFrame, fence: int) -> int:
+        partitioned = spec.partition_date_source is not None
+        stats = [F.count(F.lit(1)).alias("n")]
+        if partitioned:
+            stats += [
+                F.collect_set(DS_COL).alias("ds"),
+                F.max(F.col(DS_COL).isNull()).alias("null_ds"),
+            ]
+        row = batch.agg(*stats).first()
+        n = row["n"]
         if not self.exists(spec.name):
-            self.overwrite(spec, updates)
-            return
+            self.overwrite(spec, batch)
+            return n
+        if n == 0:
+            return 0
+        updates = batch.select(*spec.columns)
 
         # broadcast the batch keys into the anti-join only when the
         # batch is genuinely small — an hourly tick is, a backfill is
         # not, and force-broadcasting a backfill OOMs real executors.
-        # (count() here is cheap next to the rewrite that follows.)
         keys = updates.select(*spec.primary_keys)
-        anti_build = (
-            F.broadcast(keys) if updates.count() <= 1_000_000 else keys
-        )
+        anti_build = F.broadcast(keys) if n <= 1_000_000 else keys
 
-        if spec.partition_date_source is None:
+        if not partitioned:
             live = self._read_live(spec.name, spec=spec)
             base = live.select(*spec.columns) if live is not None else spec.empty(self.spark)
             merged = base.join(
@@ -1419,10 +1458,10 @@ class Warehouse:
             self._commit(spec.name, stage, staged, moves, None, fence,
                          stats_column=spec.time_column,
                          extra_stats=spec.stats_columns)
-            return
+            return n
 
-        updates_ds = self._with_ds(spec, updates)
-        touched = {r[DS_COL] for r in updates_ds.select(DS_COL).distinct().collect()}
+        # the batch's distinct ds values, NULL included when present
+        touched = set(row["ds"]) | ({None} if row["null_ds"] else set())
 
         # When the partition source column is NOT part of the PK (e.g.
         # bn_option_symbols_exercised: PK (symbol, exchange),
@@ -1466,7 +1505,8 @@ class Warehouse:
         replaced = {_ds_key(ds) for ds in touched} | set(staged)
         self._commit(spec.name, stage, staged, moves, replaced, fence,
                      stats_column=spec.time_column,
-                         extra_stats=spec.stats_columns)
+                     extra_stats=spec.stats_columns)
+        return n
 
     # ------------------------------------------------------ maintenance
 
@@ -1616,13 +1656,26 @@ class _Transaction:
             self.stack.enter_context(self.wh._writer_lock(name))
             self.owned.add(name)
 
-    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> None:
+    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> int:
         self._own(spec.name)
-        self.wh.upsert(spec, updates, order_col)
+        return self.wh.upsert(spec, updates, order_col)
 
     def overwrite(self, spec: TableSpec, df: DataFrame) -> None:
         self._own(spec.name)
         self.wh.overwrite(spec, df)
+
+
+def content_digest(spec: TableSpec) -> Column:
+    """Aggregate column: an order-independent fingerprint of a
+    relation with ``spec``'s columns — the sum of every row's 64-bit
+    ``xxhash64`` as ``decimal(38,0)``, which cannot overflow (under
+    ANSI a ``bigint`` sum would). The hash also covers each column's
+    NULL flag, so a value moved to a neighbouring NULL column changes
+    it. Paired with the row count it identifies a dimension payload
+    (see ``Pipeline.update_table``)."""
+    cols = [F.col(c) for c in spec.columns]
+    row_hash = F.xxhash64(*cols, *[c.isNull() for c in cols])
+    return F.sum(row_hash.cast("decimal(38,0)"))
 
 
 def _ds_key(v) -> str:

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import ast
+import functools
 import os
+import pathlib
 
 import duckdb
 import pytest
@@ -113,7 +116,54 @@ _SLOW_TESTS = {
 }
 
 
+# --------------------------------------------------------------- suite marker
+#
+# Tests that need the retired training-data suite (``trainingdata_spark``
+# or ``retired_queries``) carry the `suite` marker, so
+#   python -m pytest tests/ -m 'not suite'
+# is the quick market-engine loop. A file importing the suite at module
+# level is suite as a whole (it cannot even be collected without it); in
+# a file importing it inside test functions, only those tests are.
+_SUITE_MODULES = ("trainingdata_spark", "retired_queries")
+
+
+def _imports_suite(node: ast.AST) -> bool:
+    if isinstance(node, ast.Import):
+        names = [a.name for a in node.names]
+    elif isinstance(node, ast.ImportFrom):
+        names = [node.module or ""]
+    else:
+        return False
+    return any(m in name for name in names for m in _SUITE_MODULES)
+
+
+@functools.lru_cache(maxsize=None)
+def _suite_scope(path: str) -> bool | frozenset[str]:
+    """True when the file imports the suite at module level, else the
+    names of the functions that import it."""
+    tree = ast.parse(pathlib.Path(path).read_text())
+    if any(_imports_suite(n) for n in tree.body):
+        return True
+    return frozenset(
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and any(_imports_suite(n) for n in ast.walk(fn))
+    )
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "suite: needs the retired training-data suite; deselect with -m 'not suite' "
+        "for the quick market-engine loop",
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+        scope = _suite_scope(str(item.path))
+        if scope is True or getattr(item, "originalname", item.name) in scope:
+            item.add_marker(pytest.mark.suite)

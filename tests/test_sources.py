@@ -1,10 +1,21 @@
 """Ingestion connectors: distributed pagination, wire parsing,
-exchangeInfo flattening (SURVEY S1-S6)."""
+exchangeInfo flattening (SURVEY S1-S6), and the fetch-path rule:
+one-page windows are paged on the driver, multi-page windows by Spark
+tasks — with identical rows either way — over a balanced, shuffle-free
+task fan-out."""
 
 from __future__ import annotations
 
+from collections import Counter
+from datetime import datetime, timezone
+
+import pytest
 from pyspark.sql import functions as F
 
+from binancedatapipeline_spark import catalog
+from binancedatapipeline_spark.cli import standard_jobs
+from binancedatapipeline_spark.pipeline import Pipeline
+from binancedatapipeline_spark.sources import binance
 from binancedatapipeline_spark.sources.binance import (
     SyntheticBinanceApi,
     fetch_funding_rates_distributed,
@@ -317,3 +328,134 @@ def test_http_api_ban_retry_and_tail_clamp():
     tail = tail_api.klines_tail("AAAUSDT", "1h", tail_start, end)
     assert tail == canned.synth.klines_tail("AAAUSDT", "1h", tail_start, end)
     assert 0 < len(tail) <= 4 and all(r[0] >= tail_start for r in tail)
+
+
+# ------------------------------------------------------------ fetch paths
+
+SYMBOLS = [f"S{i}USDT" for i in range(5)]
+# windows in bars of the fetched series: none opens inside the empty
+# one; page_limit 400/500 makes the 1501-bar one several pages
+BARS = {"empty": 0, "one_page": 41, "multi_page": 1501}
+
+
+def _window(bars: int, step: int) -> tuple[int, int]:
+    first = START // step * step
+    if bars == 0:
+        return first + 1, first + step - 1
+    return first, first + (bars - 1) * step
+
+
+def _klines(spark, bars):
+    api = lambda: SyntheticBinanceApi(page_limit=400)  # noqa: E731
+    wire = fetch_klines_distributed(spark, SYMBOLS, *_window(bars, H), "1h",
+                                    api_factory=api, parallelism=3)
+    return parse_kline_records(wire, "SPOT", "1h")
+
+
+def _funding(spark, bars):
+    return fetch_funding_rates_distributed(spark, SYMBOLS, *_window(bars, 8 * H),
+                                           parallelism=3)
+
+
+def _uses_tasks(df) -> bool:
+    return "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("fetch", [_klines, _funding], ids=["klines", "funding"])
+@pytest.mark.parametrize("window", sorted(BARS))
+def test_driver_and_task_paths_return_identical_rows(spark, monkeypatch, fetch, window):
+    out = {}
+    for path, page_rows in (("driver", float("inf")), ("tasks", float("-inf"))):
+        monkeypatch.setattr(binance, "PAGE_ROWS", page_rows)
+        df = fetch(spark, BARS[window])
+        assert _uses_tasks(df) == (path == "tasks")
+        out[path] = (df.schema, sorted(map(tuple, df.collect())))
+    assert out["driver"] == out["tasks"]
+    assert len(out["driver"][1]) == len(SYMBOLS) * BARS[window]
+
+
+def test_window_size_picks_the_path(spark):
+    """Expected bars ((end − start) / interval + 1) against one page:
+    the tick's 180 1m bars or 3 1h bars stay on the driver, a 1-day
+    1m backfill (1441 bars) goes to Spark tasks."""
+    m = 60_000
+    tick_1m = fetch_klines_distributed(spark, SYMBOLS, START, START + 180 * m, "1m")
+    tick_1h = fetch_klines_distributed(spark, SYMBOLS, START, START + 2 * H, "1h")
+    day_1m = fetch_klines_distributed(spark, SYMBOLS, START, START + 1440 * m, "1m")
+    assert not _uses_tasks(tick_1m) and not _uses_tasks(tick_1h)
+    assert _uses_tasks(day_1m)
+    assert tick_1m.count() == len(SYMBOLS) * 181
+
+
+def test_fanout_slices_symbols_evenly_without_a_shuffle(spark):
+    symbols = [f"S{i}USDT" for i in range(10)]
+    fan = binance._symbol_fanout(spark, symbols, 4)
+    per_task = fan.rdd.glom().collect()
+    assert [len(t) for t in per_task] == [3, 3, 2, 2]
+    assert [r["symbol"] for t in per_task for r in t] == symbols
+    assert "Exchange" not in fan._jdf.queryExecution().executedPlan().toString()
+    assert [len(s) for s in binance._slices(symbols[:3], 8)] == [1, 1, 1]
+    assert binance._slices([], 4) == [[]]
+
+
+def test_tick_requests_each_page_once_per_table(spark, tmp_path):
+    """The batch is no longer cached by update_table: the upsert's one
+    persisted batch must still evaluate each fetch exactly once — on
+    the distributed backfill and on the driver-side tick alike."""
+    log = str(tmp_path / "requests.log")
+
+    def counting_api():
+        from binancedatapipeline_spark.sources.binance import SyntheticBinanceApi
+
+        class Counting(SyntheticBinanceApi):
+            def _log(self, kind, symbol, start_ms, page):
+                if page:
+                    with open(log, "a") as f:
+                        f.write(f"{kind} {symbol} {start_ms}\n")
+                return page
+
+            def klines(self, symbol, interval, start_ms, end_ms):
+                return self._log("klines", symbol, start_ms,
+                                 super().klines(symbol, interval, start_ms, end_ms))
+
+            def funding(self, symbol, start_ms, end_ms):
+                return self._log("funding", symbol, start_ms,
+                                 super().funding(symbol, start_ms, end_ms))
+
+        return Counting(page_limit=1000)
+
+    symbols = ["AUSDT", "BUSDT", "CUSDT"]
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    for job in standard_jobs(symbols, "1m", api_factory=counting_api, parallelism=2):
+        pipe.register(job)
+
+    def requests():
+        with open(log) as f:
+            lines = f.read().splitlines()
+        open(log, "w").close()
+        return lines
+
+    t0 = datetime(2024, 3, 1, 0, 0)
+    # backfill: 1 day of 1m bars (1441 > one page) through Spark tasks
+    pipe.update_table(catalog.BN_SPOT_KLINES.name, now=t0.replace(day=2), backfill_start=t0)
+    backfill = requests()
+    assert len(backfill) == len(set(backfill)), "a backfill page was fetched twice"
+    assert len(backfill) == 2 * len(symbols)  # 1000 + 441 bars per symbol
+    pipe.update_table(catalog.BN_PERP_KLINES.name, now=t0.replace(day=2), backfill_start=t0)
+    pipe.update_table(catalog.BN_FUNDING_RATES.name, now=t0.replace(day=2), backfill_start=t0)
+    requests()
+
+    res = pipe.update_all(now=datetime(2024, 3, 2, 1, 0))
+    assert all(n > 0 for n in res.values()), res
+    # one page per symbol per table, from watermark − lookback: spot and
+    # perp klines (same transport) from 22:00, funding from 16:00
+    klines_from = _ms(datetime(2024, 3, 1, 22, 0))
+    funding_from = _ms(datetime(2024, 3, 1, 16, 0))
+    assert Counter(requests()) == Counter(
+        {f"klines {s} {klines_from}": 2 for s in symbols}
+        | {f"funding {s} {funding_from}": 1 for s in symbols}
+    )
+
+
+def _ms(dt: datetime) -> int:
+    return int(dt.replace(tzinfo=timezone.utc).timestamp() * 1000)
